@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall-clock seconds. */
 object Bench {
@@ -52,10 +54,13 @@ object Bench {
       // a smaller scale
       System.gc()
     }
+    // stdout carries only the JSON line; failures go to stderr
+    def fail(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: ${Graft.failureLine(e)}")
     // JIT + parquet-footer warmup so per-query numbers measure the plan,
     // not first-touch class loading
     SparkEntry.queries.get("w1_latest_per_key").foreach { fn =>
-      try run(fn) catch { case _: Throwable => () }
+      try run(fn) catch { case NonFatal(e) => fail("warmup w1_latest_per_key", e) }
     }
     release()
     // optional comma-separated subset (freezing BASELINE/SCALING rows for
@@ -65,11 +70,12 @@ object Bench {
     val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
     // (seconds, shuffle-write MB, spill MB) for one run; telemetry is
     // the listener delta across the run (first sample per query is kept)
-    def timeOne(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def timeOne(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Double, Double) = {
       val (sh0, sp0) = (shuffleBytes.get, spillBytes.get)
       val t0 = System.nanoTime()
-      val ok = try { run(fn); true } catch { case _: Throwable => false }
+      val ok = try { run(fn); true } catch { case NonFatal(e) => fail(name, e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       release()
       val sh = (shuffleBytes.get - sh0) / 1e6
@@ -107,10 +113,10 @@ object Bench {
             ms.flatMap(m => scala.util.Try(m.group(3).toDouble).toOption
               .map(m.group(1) -> _)).toMap)
         }.getOrElse((Map.empty, Map.empty))
-      } catch { case _: Throwable => (Map.empty, Map.empty) }
+      } catch { case NonFatal(e) => fail("BASELINE.md frozen rows", e); (Map.empty, Map.empty) }
     }
     val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (t1, sh, sp) = timeOne(fn)
+      val (t1, sh, sp) = timeOne(name, fn)
       // One-shot samples on a shared local[32] box carry ±20-40% load
       // noise (the gate compares them to frozen multi-run medians), so
       // any sample slow enough to matter for the 2x gate gets a second
@@ -120,7 +126,7 @@ object Bench {
       var samples = List(t1)
       var shSamples = List(sh)
       if (t1 > 0.3) {
-        val (t2, sh2, _) = timeOne(fn)
+        val (t2, sh2, _) = timeOne(name, fn)
         samples ::= t2; shSamples ::= sh2
       }
       (name, fn, samples, shSamples, sh, sp)
@@ -165,7 +171,7 @@ object Bench {
       }
       val suspect = frozen.get(name).exists(f => best(samples0) > 1.5 * f)
       if (suspect) {
-        val d1 = timeOne(fn); val d2 = timeOne(fn)
+        val d1 = timeOne(name, fn); val d2 = timeOne(name, fn)
         val all = List(d1._1, d2._1) ++ samples0
         val shAll = List(d1._2, d2._2) ++ shs0
         // byte-identity tolerance: the listener is async (attribution
@@ -231,7 +237,7 @@ object Bench {
     if (only.isEmpty && isCanonicalSf)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), line + "\n")
-      catch { case _: Throwable => () } // repo may be read-only in some harnesses
+      catch { case NonFatal(e) => fail("BENCH_FULL.json write", e) } // repo may be read-only
     println(line)
     spark.stop()
   }

@@ -13,8 +13,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Default local parallelism: the harness runs `local[32]`. */
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Default local parallelism: this machine's cores, unless a
+    * deployment sets SPARK_GRAFT_CPUS. */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** A failure as one stderr-sized line: exception class and the first
+    * line of its message (the message alone is `null` for an NPE). */
+  def failureLine(e: Throwable): String =
+    e.getClass.getName + Option(e.getMessage)
+      .flatMap(_.linesIterator.nextOption()).fold("")(": " + _)
 
   /** Shuffle partitions sized to the DATA, not the box: on a cluster this
     * is ~2-3x total cores and grows with the input; the scale sweeps

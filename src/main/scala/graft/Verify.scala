@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,8 +19,8 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${Graft.failureLine(e)}")
         // a query that throws must still leave a dump, or the driver's
         // compare silently omits it and the red row is invisible — a
         // 1-row sentinel with a __verify_error column guarantees a
@@ -30,7 +31,9 @@ object Verify {
           Seq(Option(e.getMessage).getOrElse(e.getClass.getName).take(500))
             .toDF("__verify_error")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(e2) =>
+          System.err.println(s"[verify] $name sentinel not written: ${Graft.failureLine(e2)}")
+        }
       }
       // localCheckpoint() blocks are never auto-freed; drop them so a
       // 200+-query dump doesn't accumulate storage memory across queries

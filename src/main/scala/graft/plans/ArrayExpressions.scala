@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Intersection SIZE of two ASC-sorted bigint arrays — the PPJoin+
   * verify step's inner loop (SURVEY.md §4.2: custom Expression only
@@ -24,24 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * doc's shingle set once, not once per pair) — parity-spec'd against
   * the retired spelling over the real candidate pairs.
   */
-case class IntersectCountSortedI64(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"expected (array<bigint>, array<bigint>), got (${left.dataType.sql}, ${right.dataType.sql})")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "arr_isect_count_sorted_i64"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object ArrayKernels {
+  /** The linear merge count over two ASC-sorted, nulls-LAST arrays. */
+  def intersectCountSorted(x: ArrayData, y: ArrayData): Int = {
     val na = x.numElements(); val nb = y.numElements()
     var i = 0; var j = 0; var c = 0
     var done = false
@@ -63,36 +48,22 @@ case class IntersectCountSortedI64(left: Expression, right: Expression)
     }
     c
   }
+}
+
+/** Catalyst shell over [[ArrayKernels.intersectCountSorted]]. */
+case class IntersectCountSortedI64(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(ExprTypes.I64s), Seq(ExprTypes.I64s))
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "arr_isect_count_sorted_i64"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ArrayKernels.intersectCountSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val av = ctx.freshName("av")
-      val bv = ctx.freshName("bv")
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $na && $j < $nb) {
-         |  if ($a.isNullAt($i)) {
-         |    if ($b.isNullAt($j)) { $c++; break; }
-         |    $j++;
-         |  } else if ($b.isNullAt($j)) {
-         |    $i++;
-         |  } else {
-         |    long $av = $a.getLong($i);
-         |    long $bv = $b.getLong($j);
-         |    if ($av == $bv) {
-         |      $c++;
-         |      while ($i < $na && !$a.isNullAt($i) && $a.getLong($i) == $av) $i++;
-         |      while ($j < $nb && !$b.isNullAt($j) && $b.getLong($j) == $av) $j++;
-         |    } else if ($av < $bv) { $i++; } else { $j++; }
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.ArrayKernels.intersectCountSorted($a, $b)")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined-chunking boundary detection over a per-char code
   * array — the native spelling of d10_cdc_chunking's window-hash scan
@@ -115,8 +116,6 @@ object CdcBoundariesUtil {
   * line up 1:1 with the chunk-emit `substr` downstream. Code points are
   * in [0, 0x10FFFF] ⊂ [0, 2³¹), the rolling domain by construction. */
 object CdcBoundariesStrUtil {
-  import org.apache.spark.unsafe.types.UTF8String
-
   def compute(text: UTF8String): ArrayData = {
     val s = text.toString
     val n = s.codePointCount(0, s.length)
@@ -159,8 +158,6 @@ object CdcBoundariesStrUtil {
   * by probe), minus the per-char UTF8String array the split built.
   * Empty string folds to 0 (the init); NULL in, NULL out. */
 object KarpRabinFpUtil {
-  import org.apache.spark.unsafe.types.UTF8String
-
   def compute(text: UTF8String): Long = {
     val s = text.toString
     val M = CdcBoundariesUtil.M
@@ -178,21 +175,16 @@ object KarpRabinFpUtil {
 /** See [[KarpRabinFpUtil]]. */
 case class KarpRabinFp(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected string, got ${other.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(StringType))
   override def dataType: DataType = LongType
   override def prettyName: String = "karp_rabin_fp"
 
   override protected def nullSafeEval(text: Any): Any =
-    KarpRabinFpUtil.compute(
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    KarpRabinFpUtil.compute(text.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.KarpRabinFpUtil.compute($a);")
+    defineCodeGen(ctx, ev, a => s"graft.plans.KarpRabinFpUtil.compute($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -201,21 +193,16 @@ case class KarpRabinFp(child: Expression) extends UnaryExpression {
 /** See [[CdcBoundariesStrUtil]]. */
 case class CdcBoundariesStr(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected string, got ${other.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "cdc_boundaries_str"
 
   override protected def nullSafeEval(text: Any): Any =
-    CdcBoundariesStrUtil.compute(
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    CdcBoundariesStrUtil.compute(text.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.CdcBoundariesStrUtil.compute($a);")
+    defineCodeGen(ctx, ev, a => s"graft.plans.CdcBoundariesStrUtil.compute($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -224,11 +211,8 @@ case class CdcBoundariesStr(child: Expression) extends UnaryExpression {
 /** See [[CdcBoundariesUtil]]. */
 case class CdcBoundaries(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected array<bigint>, got ${other.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(ExprTypes.I64s))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "cdc_boundaries"
 
@@ -236,8 +220,7 @@ case class CdcBoundaries(child: Expression) extends UnaryExpression {
     CdcBoundariesUtil.compute(codes.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.CdcBoundariesUtil.compute($a);")
+    defineCodeGen(ctx, ev, a => s"graft.plans.CdcBoundariesUtil.compute($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

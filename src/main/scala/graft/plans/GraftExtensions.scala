@@ -1,9 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.IntegerType
 
 /** SparkSessionExtensions hook: registers the engine's native expressions
   * so they are usable from SQL (`vec_cosine_f32(a, b)`) as well as the
@@ -12,77 +15,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `SparkSession.builder.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(clazz: Class[_], name: String, usage: String) =
-    new ExpressionInfo(clazz.getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot_f32"),
-      info(classOf[DotF32], "vec_dot_f32",
-        "vec_dot_f32(a, b) - dot product of two float vectors in double."),
-      ((args: Seq[Expression]) => DotF32(args(0), args(1))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_cosine_f32"),
-      info(classOf[CosineF32], "vec_cosine_f32",
-        "vec_cosine_f32(a, b) - cosine similarity of two float vectors."),
-      ((args: Seq[Expression]) => CosineF32(args(0), args(1))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_l2sq_f32"),
-      info(classOf[L2F32], "vec_l2sq_f32",
-        "vec_l2sq_f32(a, b) - squared L2 distance of two float vectors in double."),
-      ((args: Seq[Expression]) => L2F32(args(0), args(1))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot_f32d64"),
-      info(classOf[DotF32D64], "vec_dot_f32d64",
-        "vec_dot_f32d64(a, b) - dot of a float vector with a double vector in double."),
-      ((args: Seq[Expression]) => DotF32D64(args(0), args(1))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("arr_isect_count_sorted_i64"),
-      info(classOf[IntersectCountSortedI64], "arr_isect_count_sorted_i64",
-        "arr_isect_count_sorted_i64(a, b) - intersection size of two ASC-sorted bigint arrays."),
-      ((args: Seq[Expression]) => IntersectCountSortedI64(args(0), args(1))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_boundaries"),
-      info(classOf[CdcBoundaries], "cdc_boundaries",
-        "cdc_boundaries(codes) - rolling Karp-Rabin CDC boundary positions of a code array."),
-      ((args: Seq[Expression]) => CdcBoundaries(args(0))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_boundaries_str"),
-      info(classOf[CdcBoundariesStr], "cdc_boundaries_str",
-        "cdc_boundaries_str(text) - rolling Karp-Rabin CDC boundary positions over a string's code points."),
-      ((args: Seq[Expression]) => CdcBoundariesStr(args(0))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("shingles"),
-      info(classOf[Shingles], "shingles",
-        "shingles(tokens, n) - word n-gram shingles of a token array, space-joined."),
-      ((args: Seq[Expression]) => Shingles(args(0),
-        args(1).eval().asInstanceOf[Int])): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_l2_normalize"),
-      info(classOf[NormalizeL2], "vec_l2_normalize",
-        "vec_l2_normalize(v) - L2-normalized copy of a float/double vector (zeros when the norm is zero)."),
-      ((args: Seq[Expression]) => NormalizeL2(args(0))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_quantize_int8"),
-      info(classOf[QuantizeInt8], "vec_quantize_int8",
-        "vec_quantize_int8(v) - symmetric int8 quantization floor(x*127/max|x| + 0.5)."),
-      ((args: Seq[Expression]) => QuantizeInt8(args(0))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot_i64"),
-      info(classOf[DotI64], "vec_dot_i64",
-        "vec_dot_i64(a, b) - exact integer dot product of two bigint vectors."),
-      ((args: Seq[Expression]) => DotI64(args(0), args(1))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("karp_rabin_fp"),
-      info(classOf[KarpRabinFp], "karp_rabin_fp",
-        "karp_rabin_fp(text) - Karp-Rabin fingerprint fold acc*31 + codepoint mod 1e9+7."),
-      ((args: Seq[Expression]) => KarpRabinFp(args(0))): FunctionRegistry.FunctionBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      info(classOf[JaroWinkler], "jaro_winkler",
-        "jaro_winkler(a, b) - Jaro-Winkler similarity of two strings."),
-      ((args: Seq[Expression]) => JaroWinkler(args(0), args(1))): FunctionRegistry.FunctionBuilder))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // epsilon-band joins: abs(l - r) <= eps rewritten to a quantized
     // equi-join so the naive formulation never plans a nested loop
     ext.injectOptimizerRule(_ => BandJoinRewrite)
@@ -90,4 +24,71 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // 3x3 grid-cell equi-join — BandJoinRewrite's 2D sibling
     ext.injectOptimizerRule(_ => SpatialJoinRewrite)
   }
+}
+
+object GraftExtensions {
+
+  /** One SQL function: its name, arity, builder and usage. The builder
+    * runs only on an argument list of the right length; the result's
+    * class is what DESCRIBE FUNCTION shows. */
+  private def fn[E <: Expression](name: String, arity: Int, usage: String)(
+      build: Seq[Expression] => E)(implicit ct: ClassTag[E])
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) = {
+    val checked: FunctionBuilder = args => {
+      if (args.size != arity)
+        throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+          "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+          "actualNum" -> args.size.toString, "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+      build(args)
+    }
+    (FunctionIdentifier(name),
+      new ExpressionInfo(ct.runtimeClass.getName, null, name, s"$name$usage", ""),
+      checked)
+  }
+
+  /** shingles' width is compiled into the plan: a constant INT. */
+  private def shingleWidth(n: Expression): Int = {
+    if (!n.foldable)
+      throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+        "funcName" -> "`shingles`", "paramName" -> "`n`", "paramType" -> "\"INT\""))
+    n.eval() match {
+      case w: Int if n.dataType == IntegerType => w
+      case _ => throw new AnalysisException("UNEXPECTED_INPUT_TYPE", Map(
+        "paramIndex" -> "second", "functionName" -> "`shingles`",
+        "requiredType" -> "\"INT\"", "inputSql" -> s"\"${n.sql}\"",
+        "inputType" -> s"\"${n.dataType.sql}\""))
+    }
+  }
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("vec_dot_f32", 2, "(a, b) - dot product of two float vectors in double.")(
+      a => DotF32(a(0), a(1))),
+    fn("vec_cosine_f32", 2, "(a, b) - cosine similarity of two float vectors.")(
+      a => CosineF32(a(0), a(1))),
+    fn("vec_l2sq_f32", 2, "(a, b) - squared L2 distance of two float vectors in double.")(
+      a => L2F32(a(0), a(1))),
+    fn("vec_dot_f32d64", 2, "(a, b) - dot of a float vector with a double vector in double.")(
+      a => DotF32D64(a(0), a(1))),
+    fn("vec_dot_i64", 2, "(a, b) - exact integer dot product of two bigint vectors.")(
+      a => DotI64(a(0), a(1))),
+    fn("vec_l2_normalize", 1,
+      "(v) - L2-normalized copy of a float/double vector (zeros when the norm is zero).")(
+      a => NormalizeL2(a(0))),
+    fn("vec_quantize_int8", 1, "(v) - symmetric int8 quantization floor(x*127/max|x| + 0.5).")(
+      a => QuantizeInt8(a(0))),
+    fn("arr_isect_count_sorted_i64", 2,
+      "(a, b) - intersection size of two ASC-sorted bigint arrays.")(
+      a => IntersectCountSortedI64(a(0), a(1))),
+    fn("cdc_boundaries", 1,
+      "(codes) - rolling Karp-Rabin CDC boundary positions of a code array.")(
+      a => CdcBoundaries(a(0))),
+    fn("cdc_boundaries_str", 1,
+      "(text) - rolling Karp-Rabin CDC boundary positions over a string's code points.")(
+      a => CdcBoundariesStr(a(0))),
+    fn("karp_rabin_fp", 1, "(text) - Karp-Rabin fingerprint fold acc*31 + codepoint mod 1e9+7.")(
+      a => KarpRabinFp(a(0))),
+    fn("shingles", 2, "(tokens, n) - word n-gram shingles of a token array, space-joined.")(
+      a => Shingles(a(0), shingleWidth(a(1)))),
+    fn("jaro_winkler", 2, "(a, b) - Jaro-Winkler similarity of two strings.")(
+      a => JaroWinkler(a(0), a(1))))
 }

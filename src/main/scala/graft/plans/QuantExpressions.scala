@@ -1,56 +1,36 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native spellings of the int8 similarity-search codec's per-vector
   * HOFs (guide §4: the L2F32 recipe applied to the quantization
-  * family). Each replicates its retired higher-order-function
-  * formulation bit-for-bit — same strict left folds in double, same
-  * float→double exact widening, same null/edge semantics — and keeps
-  * the widened quantize/rerank map sides in whole-stage codegen. At
-  * 100 TB quantization is the ingest-side storage codec: one pass per
-  * corpus vector, so per-element interpreter frames are the multiplier
-  * that matters.
+  * family; the codec's integer dot is [[DotI64]]). Each kernel
+  * replicates its retired higher-order-function formulation
+  * bit-for-bit — same strict left folds in double, same float→double
+  * exact widening, same null/edge semantics — and keeps the widened
+  * quantize/rerank map sides in whole-stage codegen. At 100 TB
+  * quantization is the ingest-side storage codec: one pass per corpus
+  * vector, so per-element interpreter frames are the multiplier that
+  * matters. `isFloat` selects the element type and is a literal in
+  * generated code.
   */
-private[plans] object QuantUtil {
+object QuantKernels {
   /** Read element i as double, widening float exactly like
     * `cast(array<double>)`. */
-  @inline def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
+  @inline private def elem(a: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 
-  def floatArray(dt: DataType): Option[Boolean] = dt match {
-    case ArrayType(FloatType, _) => Some(true)
-    case ArrayType(DoubleType, _) => Some(false)
-    case _ => None
-  }
-}
-
-/** L2-normalized copy of a float/double vector, as array<double> —
-  * the retired spelling: n = sqrt(strict-left-fold of x²); each
-  * element x/n, 0.0 for every element when n == 0. Null ELEMENTS
-  * poison the norm fold to null, which the retired `when(n === 0.0,
-  * 0.0).otherwise(x / n)` turns into an all-null array (when-condition
-  * null takes the otherwise branch, x/null is null) — replicated
-  * exactly. NULL input → NULL. */
-case class NormalizeL2(child: Expression) extends UnaryExpression {
-
-  private lazy val isFloat: Boolean = QuantUtil.floatArray(child.dataType).get
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    QuantUtil.floatArray(child.dataType) match {
-      case Some(_) => TypeCheckResult.TypeCheckSuccess
-      case None => TypeCheckResult.TypeCheckFailure(
-        s"expected array<float> or array<double>, got ${child.dataType.sql}")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "vec_l2_normalize"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  /** The retired spelling: n = sqrt(strict-left-fold of x²); each
+    * element x/n, 0.0 for every element when n == 0. Null ELEMENTS
+    * poison the norm fold to null, which the retired `when(n === 0.0,
+    * 0.0).otherwise(x / n)` turns into an all-null array
+    * (when-condition null takes the otherwise branch, x/null is
+    * null) — replicated exactly. */
+  def normalizeL2(x: ArrayData, isFloat: Boolean): ArrayData = {
     val n = x.numElements()
     var hasNull = false
     var ss = 0.0
@@ -58,7 +38,7 @@ case class NormalizeL2(child: Expression) extends UnaryExpression {
     while (i < n) {
       if (x.isNullAt(i)) hasNull = true
       else if (!hasNull) {
-        val v = QuantUtil.elem(x, i, isFloat)
+        val v = elem(x, i, isFloat)
         ss += v * v
       }
       i += 1
@@ -68,49 +48,21 @@ case class NormalizeL2(child: Expression) extends UnaryExpression {
     val out = new Array[AnyRef](n)
     i = 0
     while (i < n) {
-      val v = QuantUtil.elem(x, i, isFloat)
+      val v = elem(x, i, isFloat)
       out(i) = java.lang.Double.valueOf(if (norm == 0.0) 0.0 else v / norm)
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("normalizeL2", this, classOf[NormalizeL2].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.nativeEval($a);")
-  }
-
-  /** codegen entry (nullSafeEval is protected). */
-  def nativeEval(a: ArrayData): ArrayData = nullSafeEval(a).asInstanceOf[ArrayData]
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Symmetric int8 quantization of a float/double vector:
-  * q_i = floor(x_i·127/max|x| + 0.5), array<long> — the retired
-  * spelling's semantics exactly: the max|x| fold SKIPS null elements
-  * and ranks NaN greatest (array_max's ordering); per element,
-  * m == 0.0 gives 0 even for a null element (the retired
-  * `when(m === 0.0, 0L)` fires before the element is read), a null
-  * element under m != 0 gives null, and an all-null/empty max (m null)
-  * gives an all-null array. NULL input → NULL. */
-case class QuantizeInt8(child: Expression) extends UnaryExpression {
-
-  private lazy val isFloat: Boolean = QuantUtil.floatArray(child.dataType).get
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    QuantUtil.floatArray(child.dataType) match {
-      case Some(_) => TypeCheckResult.TypeCheckSuccess
-      case None => TypeCheckResult.TypeCheckFailure(
-        s"expected array<float> or array<double>, got ${child.dataType.sql}")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "vec_quantize_int8"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  /** q_i = floor(x_i·127/max|x| + 0.5) with the retired spelling's
+    * semantics exactly: the max|x| fold SKIPS null elements and ranks
+    * NaN greatest (array_max's ordering); per element, m == 0.0 gives
+    * 0 even for a null element (the retired `when(m === 0.0, 0L)`
+    * fires before the element is read), a null element under m != 0
+    * gives null, and an all-null/empty max (m null) gives an all-null
+    * array. */
+  def quantizeInt8(x: ArrayData, isFloat: Boolean): ArrayData = {
     val n = x.numElements()
     // max|x| ignoring nulls; NaN greatest (Spark's double ordering)
     var m = 0.0
@@ -118,7 +70,7 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
     var i = 0
     while (i < n) {
       if (!x.isNullAt(i)) {
-        val v = math.abs(QuantUtil.elem(x, i, isFloat))
+        val v = math.abs(elem(x, i, isFloat))
         if (!seen || java.lang.Double.compare(v, m) > 0) m = v
         seen = true
       }
@@ -131,82 +83,56 @@ case class QuantizeInt8(child: Expression) extends UnaryExpression {
         if (seen && m == 0.0) java.lang.Long.valueOf(0L)
         else if (!seen || x.isNullAt(i)) null
         else java.lang.Long.valueOf(
-          math.floor(QuantUtil.elem(x, i, isFloat) * 127.0 / m + 0.5).toLong)
+          math.floor(elem(x, i, isFloat) * 127.0 / m + 0.5).toLong)
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("quantizeInt8", this, classOf[QuantizeInt8].getName)
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $self.nativeEval($a);")
+  def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
   }
+}
 
-  /** codegen entry (nullSafeEval is protected). */
-  def nativeEval(a: ArrayData): ArrayData = nullSafeEval(a).asInstanceOf[ArrayData]
+/** L2-normalized copy of a float/double vector, as array<double>
+  * ([[QuantKernels.normalizeL2]]). NULL input → NULL. */
+case class NormalizeL2(child: Expression) extends UnaryExpression {
+
+  private lazy val isFloat = QuantKernels.isFloat(child)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(ExprTypes.F32s, ExprTypes.F64s))
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def prettyName: String = "vec_l2_normalize"
+
+  override protected def nullSafeEval(a: Any): Any =
+    QuantKernels.normalizeL2(a.asInstanceOf[ArrayData], isFloat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.plans.QuantKernels.normalizeL2($a, $isFloat)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Exact integer dot of two bigint vectors — the retired
-  * `aggregate(zip_with(a, b, *), 0, +)`: Java long wrap semantics
-  * (identical to Spark's bigint arithmetic), NULL when the lengths
-  * differ or any element is null (zip_with pads the shorter side with
-  * null, poisoning the fold). */
-case class DotI64(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** Symmetric int8 quantization of a float/double vector, as
+  * array<long> ([[QuantKernels.quantizeInt8]]). NULL input → NULL. */
+case class QuantizeInt8(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"expected (array<bigint>, array<bigint>), got (${left.dataType.sql}, ${right.dataType.sql})")
-  }
-  override def dataType: DataType = LongType
-  // can produce null from non-null inputs (ragged / null-element arrays)
-  override def nullable: Boolean = true
-  override def prettyName: String = "vec_dot_i64"
+  private lazy val isFloat = QuantKernels.isFloat(child)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += x.getLong(i) * y.getLong(i)
-      i += 1
-    }
-    acc
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(ExprTypes.F32s, ExprTypes.F64s))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "vec_quantize_int8"
+
+  override protected def nullSafeEval(a: Any): Any =
+    QuantKernels.quantizeInt8(a.asInstanceOf[ArrayData], isFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.plans.QuantKernels.quantizeInt8($a, $isFloat)")
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -66,24 +66,18 @@ object ShinglesUtil {
 /** See [[ShinglesUtil]]. `n` is a plan-time constant (every call site
   * passes a literal width), so it compiles into the generated code. */
 case class Shingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
+  require(n >= 1, s"shingles: width must be >= 1, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected array<string>, got ${other.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExprTypes.check(this, Seq(ExprTypes.Strs))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   // a NULL input maps to the empty array (the retired wrapper's
   // semantics), so the output is never null
   override def nullable: Boolean = false
   override def prettyName: String = "shingles"
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    ShinglesUtil.compute(
-      if (v == null) null else v.asInstanceOf[ArrayData], n)
-  }
+  override def eval(input: InternalRow): Any =
+    ShinglesUtil.compute(child.eval(input).asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)

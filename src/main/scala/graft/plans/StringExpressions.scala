@@ -23,13 +23,7 @@ case class JaroWinkler(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType) {
-      TypeCheckResult.TypeCheckSuccess
-    } else {
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got " +
-          s"(${left.dataType.catalogString}, ${right.dataType.catalogString})")
-    }
+    ExprTypes.check(this, Seq(StringType), Seq(StringType))
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "jaro_winkler"

@@ -8,9 +8,10 @@ import graft.sources.Tables
 /** Native CDC boundary expression (graft.plans.CdcBoundaries): parity
   * with the retired O(16·n) HOF window-hash spelling — over the real
   * corpus, randomized in-domain code arrays, and the null-element /
-  * short-array / null-input edges.
+  * short-array / null-input edges, each on both evaluation paths
+  * ([[EvalPaths]]).
   */
-class CdcExprSpec extends AnyFunSuite {
+class CdcExprSpec extends AnyFunSuite with EvalPathTests {
   import SharedSpark._
 
   // the retired HOF spelling, inlined verbatim — the parity oracle
@@ -30,7 +31,7 @@ class CdcExprSpec extends AnyFunSuite {
       ColumnBridge.expression(cs)))
   }
 
-  test("CdcBoundaries is identical to the HOF window-hash over the real corpus") {
+  testBoth("CdcBoundaries is identical to the HOF window-hash over the real corpus") {
     val codes = transform(
       filter(split(col("text"), ""), c => c =!= ""),
       ch => ascii(ch).cast("long"))
@@ -41,7 +42,7 @@ class CdcExprSpec extends AnyFunSuite {
     assert(both.count() > 100)
   }
 
-  test("CdcBoundaries matches the HOF on randomized in-domain code arrays") {
+  testBoth("CdcBoundaries matches the HOF on randomized in-domain code arrays") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     // mixed magnitudes: ascii-like, full [0, 2^31) range, many-zero runs
@@ -52,12 +53,12 @@ class CdcExprSpec extends AnyFunSuite {
         case 1 => (rnd.nextLong() & 0x7fffffffL)
         case _ => 0L
       }))
-    val df = rows.toDF("cs")
+    val df = EvalPaths.nonLocal(rows.toDF("cs"))
     val both = df.select(hofBs(col("cs")).as("hof"), nativeBs(col("cs")).as("native"))
     assert(both.filter(col("hof") =!= col("native")).isEmpty)
   }
 
-  test("CdcBoundariesStr equals the codes-array pipeline over the corpus and unicode strings") {
+  testBoth("CdcBoundariesStr equals the codes-array pipeline over the corpus and unicode strings") {
     import spark.implicits._
     def nativeStr(s: Column): Column = {
       import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -81,11 +82,11 @@ class CdcExprSpec extends AnyFunSuite {
     // unicode: multi-byte and astral code points count as ONE position
     // in split('')/ascii/substring/length alike — the native iteration
     // must agree (17+ code points so the scan actually runs)
-    val uni = Seq(
+    val uni = EvalPaths.nonLocal(Seq(
       "aé€𝄞" * 8,                    // astral + 2/3-byte chars
       "𝄞" * 20,                      // all astral
       ("x" * 16) + "é" + ("y" * 16)  // boundary-straddling multibyte
-    ).toDF("text")
+    ).toDF("text"))
     val ucodes = transform(
       filter(split(col("text"), ""), c => c =!= ""),
       ch => ascii(ch).cast("long"))
@@ -97,6 +98,9 @@ class CdcExprSpec extends AnyFunSuite {
       """SELECT cdc_boundaries_str(CAST(NULL AS STRING)) AS n,
         |       cdc_boundaries_str('short') AS s""".stripMargin).head()
     assert(e.isNullAt(0) && e.getSeq[Long](1).isEmpty)
+    val strEdge = EvalPaths.rows(EvalPaths.nonLocal(Seq[String](null, "", "short").toDF("text"))
+      .select(nativeStr(col("text"))))
+    assert(strEdge.map(r => String.valueOf(r.get(0))) == Seq("null", "ArraySeq()", "ArraySeq()"))
   }
 
   test("CdcBoundaries edges: null element poisons its windows; short arrays empty; NULL in NULL out") {
@@ -105,8 +109,8 @@ class CdcExprSpec extends AnyFunSuite {
     // HOF's null-poisoned fold (null % 64 === 0 is null -> filtered)
     val withNull: Seq[java.lang.Long] =
       (0 until 40).map(i => if (i == 20) null else java.lang.Long.valueOf(0L))
-    val df = Seq(Tuple1(withNull)).toDF("cs")
-    val r = df.select(hofBs(col("cs")).as("hof"), nativeBs(col("cs")).as("native")).head()
+    val df = EvalPaths.nonLocal(Seq(Tuple1(withNull)).toDF("cs"))
+    val r = EvalPaths.rows(df.select(hofBs(col("cs")).as("hof"), nativeBs(col("cs")).as("native"))).head
     assert(r.getSeq[Long](0) == r.getSeq[Long](1))
     // all-zero codes: every window hashes to 0 -> every position fires;
     // the null at 0-based 20 kills windows ending at e in [20, 35],
@@ -120,9 +124,14 @@ class CdcExprSpec extends AnyFunSuite {
         |""".stripMargin).head()
     assert(edge.isNullAt(0))
     assert(edge.getSeq[Long](1).isEmpty && edge.getSeq[Long](2).isEmpty)
+    // the same edges as DataFrame rows (the HOF is undefined below 17)
+    val dfEdge = EvalPaths.rows(EvalPaths.nonLocal(Seq[Seq[java.lang.Long]](
+      null, Seq(), Seq(0L, 0L, 0L).map(java.lang.Long.valueOf)).map(Tuple1(_)).toDF("cs"))
+      .select(nativeBs(col("cs"))))
+    assert(dfEdge.map(r => String.valueOf(r.get(0))) == Seq("null", "ArraySeq()", "ArraySeq()"))
   }
 
-  test("KarpRabinFp equals the HOF fingerprint fold over the corpus and unicode edges") {
+  testBoth("KarpRabinFp equals the HOF fingerprint fold over the corpus and unicode edges") {
     import spark.implicits._
     // the retired HOF spelling, inlined verbatim — the parity oracle
     def hofFp(text: Column): Column =
@@ -135,15 +144,15 @@ class CdcExprSpec extends AnyFunSuite {
         graft.functions.Text.fingerprint(col("text")).as("native"))
     assert(corpus.filter(col("hof") =!= col("native")).isEmpty)
     assert(corpus.count() > 100)
-    val uni = Seq("", "a", "aé€𝄞 mixed 𝄞 text", "𝄞" * 5).toDF("text")
+    val uni = EvalPaths.nonLocal(Seq("", "a", "aé€𝄞 mixed 𝄞 text", "𝄞" * 5, null).toDF("text"))
       .select(hofFp(col("text")).as("hof"),
         graft.functions.Text.fingerprint(col("text")).as("native"))
-    assert(uni.filter(col("hof") =!= col("native")).isEmpty)
+    assert(uni.filter(!(col("hof") <=> col("native"))).isEmpty)
     val n = spark.sql("SELECT karp_rabin_fp(CAST(NULL AS STRING)) AS n, karp_rabin_fp('') AS e").head()
     assert(n.isNullAt(0) && n.getLong(1) == 0L)
   }
 
-  test("cdcChunks output is unchanged through the native boundary scan (MD5 spot check)") {
+  testBoth("cdcChunks output is unchanged through the native boundary scan (MD5 spot check)") {
     // end-to-end: the chunk relation's row set is a pure function of the
     // boundary set; pin a digest-stable aggregate of the whole output
     val out = graft.queries.TextOps.cdcChunks(

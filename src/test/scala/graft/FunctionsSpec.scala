@@ -775,11 +775,17 @@ class FunctionsSpec extends AnyFunSuite {
       assert(s == similarity(b, a) && s >= 0.0 && s <= 1.0, s"$a/$b")
       if (a == b) assert(s == 1.0)
     }
-    // the Column path (generated code) agrees with the static method
-    val pairs = (0 until 2000).map(_ => (rs(), rs()))
-    val viaDf = pairs.toDF("a", "b")
-      .select(graft.functions.Text.jaroWinkler(col("a"), col("b"))).as[Double].collect()
-    pairs.zip(viaDf).foreach { case ((a, b), d) => assert(d == similarity(a, b)) }
+    // the Column path agrees with the static method, through generated
+    // code and through interpreted eval alike; plus empty, unicode and
+    // NULL edges
+    val pairs = (0 until 2000).map(_ => (rs(), rs())) ++
+      Seq(("", ""), ("abc", ""), ("aé𝄞b", "aé𝄞c"), (null, "x"))
+    val viaDf = EvalPaths.rows(EvalPaths.nonLocal(pairs.toDF("a", "b"))
+      .select(graft.functions.Text.jaroWinkler(col("a"), col("b"))))
+    pairs.zip(viaDf).foreach {
+      case ((null, _), r) => assert(r.isNullAt(0))
+      case ((a, b), r) => assert(r.getDouble(0) == similarity(a, b), s"$a/$b")
+    }
     // and it is registered for SQL via GraftExtensions
     val viaSql = spark.sql("SELECT jaro_winkler('martha', 'marhta')").head().getDouble(0)
     assert(viaSql == 0.9611111111111111)

@@ -9,10 +9,10 @@ import graft.sources.Tables
 /** Native quantization-family expressions (graft.plans.NormalizeL2 /
   * QuantizeInt8 / DotI64): bit-parity with the retired HOF spellings
   * over the real embeddings (float AND double inputs, composed as the
-  * d6_sq_rerank pipeline composes them) plus the zero-norm, null and
-  * ragged edges.
+  * d6_sq_rerank pipeline composes them) plus the zero-norm, null, NaN
+  * and ragged edges, each on both evaluation paths ([[EvalPaths]]).
   */
-class QuantExprSpec extends AnyFunSuite {
+class QuantExprSpec extends AnyFunSuite with EvalPathTests {
   import SharedSpark._
 
   // the retired HOF spellings, inlined verbatim — the parity oracles
@@ -32,7 +32,7 @@ class QuantExprSpec extends AnyFunSuite {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L),
       (acc: Column, x: Column) => acc + x)
 
-  test("NormalizeL2 and QuantizeInt8 are bit-identical to the HOFs over real embeddings") {
+  testBoth("NormalizeL2 and QuantizeInt8 are bit-identical to the HOFs over real embeddings") {
     val e = Tables(spark, sf).embeddings
     // float input, and the composed double input quantize(normalized(v))
     // — exactly d6_sq_rerank's shape
@@ -49,7 +49,7 @@ class QuantExprSpec extends AnyFunSuite {
     assert(both.count() > 100)
   }
 
-  test("DotI64 matches the HOF integer dot over quantized pairs") {
+  testBoth("DotI64 matches the HOF integer dot over quantized pairs") {
     val e = Tables(spark, sf).embeddings.limit(60)
     val q = e.select(col("vec_id"),
       Vectors.quantizeInt8(col("embedding")).as("qv"))
@@ -62,29 +62,32 @@ class QuantExprSpec extends AnyFunSuite {
 
   test("quantization-family edges: zero vectors, empty/null arrays, null elements, ragged dot") {
     import spark.implicits._
-    val df = Seq(
+    val df = EvalPaths.nonLocal(Seq(
       (1L, Seq(0.0f, 0.0f)),     // zero norm -> zeros / zero quant
       (2L, Seq(3.0f, -4.0f)),    // plain
-      (3L, Seq.empty[Float])     // empty -> empty
-    ).toDF("id", "v")
-    val r = df.select(col("id"),
+      (3L, Seq.empty[Float]),    // empty -> empty
+      (4L, Seq(Float.NaN, 1.0f)) // NaN norm and max: NaN / floor(NaN)
+    ).toDF("id", "v"))
+    val r = EvalPaths.rows(df.select(col("id"),
         hofNormalized(col("v")).as("hn"), Vectors.normalized(col("v")).as("nn"),
         hofQuantize(col("v")).as("hq"), Vectors.quantizeInt8(col("v")).as("nq"))
-      .orderBy(col("id")).collect()
+      .orderBy(col("id")))
     r.foreach { row =>
-      assert(row.getSeq[Double](1) == row.getSeq[Double](2), s"norm id ${row.getLong(0)}")
-      assert(row.getSeq[Long](3) == row.getSeq[Long](4), s"quant id ${row.getLong(0)}")
+      // rendered, so NaN elements compare equal
+      assert(String.valueOf(row.get(1)) == String.valueOf(row.get(2)), s"norm id ${row.getLong(0)}")
+      assert(String.valueOf(row.get(3)) == String.valueOf(row.get(4)), s"quant id ${row.getLong(0)}")
     }
+    assert(String.valueOf(r(3).get(2)) == "ArraySeq(NaN, NaN)")
     assert(r(0).getSeq[Double](2) == Seq(0.0, 0.0))
     assert(r(0).getSeq[Long](4) == Seq(0L, 0L))
     // null ELEMENTS poison the norm fold / the max's consumers exactly
     // like the HOFs (all-null normalized; null quants under m != 0)
     val withNull: Seq[java.lang.Double] =
       Seq(java.lang.Double.valueOf(1.0), null, java.lang.Double.valueOf(2.0))
-    val nrow = Seq(Tuple1(withNull)).toDF("v")
+    val nrow = EvalPaths.rows(EvalPaths.nonLocal(Seq(Tuple1(withNull)).toDF("v"))
       .select(hofNormalized(col("v")).as("hn"), Vectors.normalized(col("v")).as("nn"),
-        hofQuantize(col("v")).as("hq"), Vectors.quantizeInt8(col("v")).as("nq"))
-      .head()
+        hofQuantize(col("v")).as("hq"), Vectors.quantizeInt8(col("v")).as("nq")))
+      .head
     assert(nrow.getSeq[java.lang.Double](0) == nrow.getSeq[java.lang.Double](1))
     assert(nrow.getSeq[java.lang.Long](2) == nrow.getSeq[java.lang.Long](3))
     // NULL input and SQL registration; ragged dot is NULL like zip_with
@@ -96,5 +99,20 @@ class QuantExprSpec extends AnyFunSuite {
         |""".stripMargin).head()
     assert(s.isNullAt(0) && s.isNullAt(1) && s.isNullAt(2))
     assert(s.getLong(3) == 11L)
+    // the integer dot over DataFrame rows: a wrapped sum that lands on
+    // Long.MinValue (the kernel's NULL sentinel) is still a value
+    def l(xs: java.lang.Long*): Seq[java.lang.Long] = xs
+    val dots = EvalPaths.rows(EvalPaths.nonLocal(Seq(
+      (1, l(1L, 2L), l(3L, 4L)),   // 11
+      (2, l(1L, 2L), l(3L)),       // ragged: NULL
+      (3, l(1L, null), l(3L, 4L)), // null element: NULL
+      (4, l(), l()),               // empty: 0
+      (5, l(Long.MinValue), l(1L)),
+      (6, null, l(1L))             // NULL input
+    ).toDF("id", "a", "b")).select(col("id"),
+      hofDotInt(col("a"), col("b")), Vectors.dotInt(col("a"), col("b"))))
+    dots.foreach(r => assert(String.valueOf(r.get(1)) == String.valueOf(r.get(2)), s"dot id ${r.getInt(0)}"))
+    assert(dots.map(r => String.valueOf(r.get(2))) ==
+      Seq("11", "null", "null", "0", Long.MinValue.toString, "null"))
   }
 }

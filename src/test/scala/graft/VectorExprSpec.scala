@@ -1,18 +1,31 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Vectors
 import graft.sources.Tables
 
-/** Native codegen'd vector expressions (graft.plans.DotF32/CosineF32):
-  * bit-parity with the higher-order-function formulation, SQL-callable
-  * via GraftExtensions, null behavior.
+/** Native codegen'd vector expressions (graft.plans.DotF32/CosineF32/
+  * L2F32/DotF32D64/IntersectCountSortedI64): bit-parity with the
+  * higher-order-function formulation on both evaluation paths
+  * ([[EvalPaths]]), SQL-callable via GraftExtensions, null behavior.
   */
-class VectorExprSpec extends AnyFunSuite {
+class VectorExprSpec extends AnyFunSuite with EvalPathTests {
   import SharedSpark._
 
-  test("cosineFast is bit-identical to the HOF cosine over real embeddings") {
+  // the retired HOF spellings, inlined verbatim — the parity oracles
+  private def hofD2(a: Column, b: Column) =
+    aggregate(
+      zip_with(a, b, (x, y) =>
+        (x.cast("double") - y.cast("double")) *
+          (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc: Column, x: Column) => acc + x)
+  private def hofProj(v: Column, coefs: Column) =
+    aggregate(zip_with(v.cast("array<double>"), coefs, (x, c) => x * c),
+      lit(0.0), (acc: Column, x: Column) => acc + x)
+
+  testBoth("cosineFast is bit-identical to the HOF cosine over real embeddings") {
     import spark.implicits._
     val e = Tables(spark, sf).embeddings.limit(100)
     val both = e.as("x").join(e.as("y"), col("x.vec_id") < col("y.vec_id"))
@@ -25,7 +38,7 @@ class VectorExprSpec extends AnyFunSuite {
     assert(both.count() > 1000)
   }
 
-  test("dotFast matches the HOF dot bit-for-bit") {
+  testBoth("dotFast matches the HOF dot bit-for-bit") {
     import spark.implicits._
     val e = Tables(spark, sf).embeddings.limit(50)
     val both = e.as("x").join(e.as("y"), col("x.vec_id") =!= col("y.vec_id"))
@@ -34,15 +47,7 @@ class VectorExprSpec extends AnyFunSuite {
     assert(both.filter(col("hof") =!= col("native")).isEmpty)
   }
 
-  test("Pq.d2 (native L2F32) is bit-identical to the HOF squared-L2 over real embeddings") {
-    import spark.implicits._
-    // the retired HOF spelling, inlined verbatim — the parity oracle
-    def hofD2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      aggregate(
-        zip_with(a, b, (x, y) =>
-          (x.cast("double") - y.cast("double")) *
-            (x.cast("double") - y.cast("double"))),
-        lit(0.0), (acc: org.apache.spark.sql.Column, x: org.apache.spark.sql.Column) => acc + x)
+  testBoth("Pq.d2 (native L2F32) is bit-identical to the HOF squared-L2 over real embeddings") {
     val e = Tables(spark, sf).embeddings.limit(100)
     val both = e.as("x").join(e.as("y"), col("x.vec_id") < col("y.vec_id"))
       .select(
@@ -71,12 +76,7 @@ class VectorExprSpec extends AnyFunSuite {
     assert(rows.getDouble(3) == 25.0)
   }
 
-  test("dotMixedFast (DotF32D64) is bit-identical to the HOF sign-LSH projection fold") {
-    import spark.implicits._
-    // the retired HOF spelling, inlined verbatim — the parity oracle
-    def hofProj(v: org.apache.spark.sql.Column, coefs: org.apache.spark.sql.Column) =
-      aggregate(zip_with(v.cast("array<double>"), coefs, (x, c) => x * c),
-        lit(0.0), (acc: org.apache.spark.sql.Column, x: org.apache.spark.sql.Column) => acc + x)
+  testBoth("dotMixedFast (DotF32D64) is bit-identical to the HOF sign-LSH projection fold") {
     val coefs = typedlit((0 until 64).map(d => Vectors.planeCoef(7, d)))
     val e = Tables(spark, sf).embeddings
     val both = e.select(
@@ -102,11 +102,11 @@ class VectorExprSpec extends AnyFunSuite {
 
   test("DotF32D64 null semantics match the HOF fold's (ragged/null-element/null-input)") {
     import spark.implicits._
-    val df = Seq(
+    val df = EvalPaths.nonLocal(Seq(
       (Array(1.0f, 2.0f), Array(3.0, 4.0)),   // clean: 11.0
       (Array(1.0f), Array(3.0, 4.0))          // ragged: NULL
-    ).toDF("a", "b")
-    val rows = df.select(Vectors.dotMixedFast(col("a"), col("b")).as("d")).collect()
+    ).toDF("a", "b"))
+    val rows = EvalPaths.rows(df.select(Vectors.dotMixedFast(col("a"), col("b")).as("d")))
     assert(rows(0).getDouble(0) == 11.0)
     assert(rows(1).isNullAt(0))
     val r2 = spark.sql(
@@ -116,9 +116,9 @@ class VectorExprSpec extends AnyFunSuite {
     assert(r2.isNullAt(0) && r2.isNullAt(1))
     // and a null projection takes lshTables' 0-bit branch exactly like
     // the HOF's null fold: keys of a NULL vector are the table tags
-    val nk = Seq((1L, null: Array[Float])).toDF("id", "v")
-      .select(Vectors.lshTables(col("v"), 4, 8).as("k"))
-      .head().getSeq[Long](0)
+    val nk = EvalPaths.rows(EvalPaths.nonLocal(Seq((1L, null: Array[Float])).toDF("id", "v"))
+      .select(Vectors.lshTables(col("v"), 4, 8).as("k")))
+      .head.getSeq[Long](0)
     assert(nk == (0 until 8).map(_.toLong * 16L))
   }
 
@@ -130,6 +130,10 @@ class VectorExprSpec extends AnyFunSuite {
         |       vec_cosine_f32(array(0.0F, 0.0F), array(1.0F, 0.0F)) AS z
         |""".stripMargin).as[(Double, Double, Double)].head()
     assert(row == ((1.0, 11.0, 0.0)))
+    // a wrong argument count is an analysis error naming the function
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT vec_dot_f32(array(1.0F))"))
+    assert(e.getMessage.contains("`vec_dot_f32` requires 2 parameters"), e.getMessage)
   }
 
   test("null inputs propagate null") {
@@ -143,6 +147,32 @@ class VectorExprSpec extends AnyFunSuite {
     // the HOF formulation returns NULL for both cases (zip_with pads the
     // shorter side with null); the native expressions must agree, not
     // silently truncate to min(length)
+    import spark.implicits._
+    def v(xs: java.lang.Float*): Seq[java.lang.Float] = xs
+    val df = EvalPaths.nonLocal(Seq(
+      (1, v(1f, 2f), v(3f, 4f)),          // clean
+      (2, v(1f, 2f), v(1f)),              // ragged
+      (3, v(1f, null), v(1f, 2f)),        // null element
+      (4, v(), v()),                      // empty
+      (5, v(Float.NaN, 1f), v(1f, 2f)),   // NaN: a value, not NULL
+      (6, v(Float.NaN, null), v(1f, 2f)), // NaN, then a null element
+      (7, null, v(1f))                    // NULL input
+    ).toDF("id", "a", "b"))
+    val (a, b, bd) = (col("a"), col("b"), col("b").cast("array<double>"))
+    val out = EvalPaths.rows(df.select(col("id"),
+      Vectors.dot(a, b), Vectors.dotFast(a, b),
+      Vectors.cosine(a, b), Vectors.cosineFast(a, b),
+      hofD2(a, b), graft.functions.Pq.d2(a, b),
+      hofProj(a, bd), Vectors.dotMixedFast(a, bd)))
+    val native = out.map { r =>
+      Seq(1, 3, 5, 7).foreach(i => assert(
+        String.valueOf(r.get(i)) == String.valueOf(r.get(i + 1)), s"id ${r.getInt(0)} col $i"))
+      r.getInt(0) -> Seq(2, 4, 6, 8).map(i => String.valueOf(r.get(i)))
+    }.toMap
+    Seq(2, 3, 6, 7).foreach(id => assert(native(id) == Seq.fill(4)("null"), s"id $id"))
+    assert(native(4) == Seq.fill(4)("0.0"))
+    assert(native(5) == Seq.fill(4)("NaN"))
+    // and the same through SQL literals (constant-folded through eval)
     val rows = spark.sql(
       """SELECT vec_dot_f32(array(1.0F, 2.0F), array(1.0F)) AS ragged_dot,
         |       vec_cosine_f32(array(1.0F, 2.0F), array(1.0F)) AS ragged_cos,
@@ -151,7 +181,6 @@ class VectorExprSpec extends AnyFunSuite {
         |""".stripMargin).head()
     (0 until 4).foreach(i => assert(rows.isNullAt(i), s"col $i should be NULL"))
     // and the HOF versions agree on the same inputs
-    import spark.implicits._
     val hof = Seq((Array(1.0f, 2.0f), Array(1.0f)))
       .toDF("a", "b")
       .select(Vectors.dot(col("a"), col("b")).as("d"),
@@ -160,7 +189,7 @@ class VectorExprSpec extends AnyFunSuite {
     assert(hof.isNullAt(0) && hof.isNullAt(1))
   }
 
-  test("IntersectCountSortedI64 equals size(array_intersect) over the real PPJoin+ candidates") {
+  testBoth("IntersectCountSortedI64 equals size(array_intersect) over the real PPJoin+ candidates") {
     import spark.implicits._
     // the verify-step shape itself: per-doc value-sorted shingle sets,
     // native merge count vs the retired size(array_intersect) spelling
@@ -181,7 +210,7 @@ class VectorExprSpec extends AnyFunSuite {
     assert(both.count() > 10) // spec SF has ~32 candidate pairs
   }
 
-  test("arr_isect_count_sorted_i64: duplicates, nulls, empties and null inputs match array_intersect") {
+  testBoth("arr_isect_count_sorted_i64: duplicates, nulls, empties and null inputs match array_intersect") {
     import spark.implicits._
     // size(array_intersect(a, b)) is input-order-independent, so the
     // contract is: native(array_sort(a), array_sort(b)) == size(array_intersect(a, b))
@@ -191,12 +220,12 @@ class VectorExprSpec extends AnyFunSuite {
       Seq.fill(rnd.nextInt(12))(
         if (rnd.nextInt(10) == 0) null
         else java.lang.Long.valueOf(rnd.nextInt(8).toLong))
-    val rows = Seq.fill(500)((arr(), arr()))
-    val df = rows.toDF("a", "b")
+    val rows = Seq.fill(500)((arr(), arr())) ++ Seq((null, arr()), (arr(), null))
+    val df = EvalPaths.nonLocal(rows.toDF("a", "b"))
     val both = df.select(
       size(array_intersect(col("a"), col("b"))).as("hof"),
       expr("arr_isect_count_sorted_i64(array_sort(a), array_sort(b))").as("native"))
-    assert(both.filter(col("hof") =!= col("native")).isEmpty)
+    assert(both.filter(!(col("hof") <=> col("native"))).isEmpty)
     // null input propagates NULL exactly like size(array_intersect)
     val r = spark.sql(
       """SELECT arr_isect_count_sorted_i64(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS n1,
