@@ -104,8 +104,8 @@ object Bench {
       // is meaningless and would resample every row of a scale sweep
       val row = "\\| ([a-z0-9_]+) \\| ([0-9.]+) \\| ([0-9.—]+) \\|".r
       try {
-        val p = Seq("BASELINE.md", "/root/repo/BASELINE.md")
-          .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
+        val p = Seq(java.nio.file.Paths.get("BASELINE.md"), Repo.root.resolve("BASELINE.md"))
+          .find(java.nio.file.Files.exists(_))
         p.map { f =>
           val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
           val ms = row.findAllMatchIn(text).toSeq
@@ -236,7 +236,7 @@ object Bench {
     // the full-surface line a later reader takes for the whole bench
     if (only.isEmpty && isCanonicalSf)
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), line + "\n")
+        Repo.root.resolve("BENCH_FULL.json"), line + "\n")
       catch { case NonFatal(e) => fail("BENCH_FULL.json write", e) } // repo may be read-only
     println(line)
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-/** Diagnostic main (like [[Explain]]/[[DialectProbe]]): times the
+/** Diagnostic main (like [[Plans]]): times the
   * FROM-INDEX legs of the persisted artifacts ALONE — the registered
   * persisted queries price write+query together (the honest demo
   * convention), so the scale recounts in SCALING.md need this probe to

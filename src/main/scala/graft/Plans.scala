@@ -2,13 +2,29 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev tool: dump the FORMATTED physical plan of a representative set of
-  * headline queries into PLANS.md — the "is this the plan you'd want at
-  * 100 TB" evidence artifact next to ScaleShapeSpec's mechanical
-  * assertions. Regenerate after plan-affecting changes:
-  * {{{ tools/run.sh graft.Plans /root/testdata/sf0.001 PLANS.md }}}
+/** Dev tool: the one plan-dump entry point. Three modes:
+  *
+  *  - `md <sfDir> <outFile>` writes the FORMATTED static physical plan of
+  *    the headline queries below into PLANS.md — the "is this the plan
+  *    you'd want at 100 TB" evidence artifact next to ScaleShapeSpec's
+  *    mechanical assertions. Regenerate after plan-affecting changes.
+  *  - `dump <sfDir> <outDir> <suffix> <q1,q2,...>` writes the same
+  *    formatted plan for each listed query to `<outDir>/<q>_<suffix>.txt`
+  *    (an optimization round's before/after evidence files).
+  *  - `exec <sfDir> <query>` runs one query into a noop sink and prints
+  *    its final (AQE-resolved) executed plan plus a one-line count of
+  *    scans, exchanges, reused exchanges and codegen stages.
+  *
+  * {{{
+  * tools/run.sh graft.Plans md <sfDir> PLANS.md
+  * tools/run.sh graft.Plans dump <sfDir> plans/r16 before d5_containment,tpch_q3
+  * tools/run.sh graft.Plans exec <sfDir> d5_containment
+  * }}}
   */
 object Plans {
   private val headline = Seq(
@@ -39,13 +55,33 @@ object Plans {
     "d7_quantile_norm" -> "quantile norm: grouped PrefixSum per-source ranks (tie windows on (source, score)), pooled CDF via PrefixSum — no window below (group, range-bucket)"
   )
 
+  private val usage =
+    "usage: graft.Plans md <sfDir> <outFile> | " +
+      "dump <sfDir> <outDir> <suffix> <q1,q2,...> | exec <sfDir> <query>"
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outFile) = args.take(2)
-    val spark = Graft.session(master = "local[4]", shufflePartitions = 4,
-      appName = "graft-plans")
+    val run: SparkSession => Unit = args.toList match {
+      case List("md", sfDir, outFile) => writePlansMd(_, sfDir, outFile)
+      case List("dump", sfDir, outDir, suffix, names) =>
+        dump(_, sfDir, Paths.get(outDir), suffix,
+          names.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      case List("exec", sfDir, name) => exec(_, sfDir, name)
+      case _ =>
+        System.err.println(usage)
+        sys.exit(2)
+    }
+    val spark = Graft.session(appName = "graft-plans")
+    try run(spark) finally spark.stop()
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String,
+      outFile: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.Plans` against `$sfDir`. What to look for:\n")
+    sb.append(s"Generated by `graft.Plans md` against `$sfDir`. What to look for:\n")
     sb.append("`PushedFilters`/`ReadSchema` prove predicate pushdown and column\n")
     sb.append("pruning reach the parquet scan; `BroadcastHashJoin` on every dim\n")
     sb.append("side proves small relations never shuffle the fact table;\n")
@@ -57,10 +93,36 @@ object Plans {
     headline.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"## $name\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(FormattedMode).trim)
+      sb.append(formatted(df).trim)
       sb.append("\n```\n\n")
     }
     Files.writeString(Paths.get(outFile), sb.toString)
-    spark.stop()
+  }
+
+  private def dump(spark: SparkSession, sfDir: String,
+      outDir: java.nio.file.Path, suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      try {
+        val text = formatted(SparkEntry.queries(name)(spark, sfDir))
+        Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), text)
+        println(s"[plans] wrote ${name}_$suffix.txt")
+      } catch {
+        case NonFatal(e) =>
+          println(s"[plans] FAILED $name: ${Graft.failureLine(e)}")
+      }
+    }
+  }
+
+  private def exec(spark: SparkSession, sfDir: String, name: String): Unit = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.write.format("noop").mode("overwrite").save()
+    val plan = df.queryExecution.executedPlan.toString
+    println(plan)
+    val lines = plan.linesIterator.toSeq
+    println("summary: scans=" + lines.count(_.contains("Scan parquet")) +
+      " reusedExchanges=" + lines.count(_.contains("ReusedExchange")) +
+      " exchanges=" + lines.count(l => l.contains("Exchange") && !l.contains("Reused")) +
+      " wscg=" + lines.count(_.contains("WholeStageCodegen")))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.Q
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's entry contract — see SURVEY.md §7.
   *
   * Every implemented SURVEY §2 operator is registered as a named query in
   * [[queries]]; hash-checkable ones carry DuckDB oracle SQL in

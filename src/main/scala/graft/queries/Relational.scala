@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Canon._
+import graft.Repo
 import graft.sources.Tables
 
 /** Scans, filters, projections, sorts, limits, set ops — SURVEY.md §2.1,
@@ -73,9 +74,9 @@ object Relational {
       // commas, and the weights are exact binary fractions so the grouped
       // sums are order-independent. Joined to the nation parquet so the
       // CSV relation participates in a real plan, not just a round trip.
-      Some("""SELECT z.zone, count(*) AS n_nations, sum(z.weight) AS zone_weight
+      Some(s"""SELECT z.zone, count(*) AS n_nations, sum(z.weight) AS zone_weight
              |FROM nation n
-             |JOIN read_csv('/root/repo/fixtures/s4_region_zones.csv',
+             |JOIN read_csv('${Repo.fixture("s4_region_zones.csv")}',
              |       header = true,
              |       columns = {'r_regionkey': 'INTEGER',
              |                  'zone': 'VARCHAR',
@@ -93,7 +94,7 @@ object Relational {
           org.apache.spark.sql.types.StructField("weight",
             org.apache.spark.sql.types.DoubleType)))
         val zones = spark.read.option("header", "true").schema(zschema)
-          .csv("/root/repo/fixtures/s4_region_zones.csv")
+          .csv(Repo.fixture("s4_region_zones.csv"))
         ordered(
           t.nation
             .join(broadcast(zones), col("n_regionkey") === col("r_regionkey"))
@@ -109,10 +110,10 @@ object Relational {
       // extraction, no inference), joined to the nation parquet and
       // aggregated — the other half of S4 next to s4_csv_source. Weights
       // are exact binary fractions (order-independent sums).
-      Some("""SELECT m.meta.tier AS tier, count(*) AS n_nations,
+      Some(s"""SELECT m.meta.tier AS tier, count(*) AS n_nations,
              |       sum(m.meta.weight) AS tier_weight
              |FROM nation n
-             |JOIN read_json('/root/repo/fixtures/s4_region_meta.jsonl',
+             |JOIN read_json('${Repo.fixture("s4_region_meta.jsonl")}',
              |       format = 'newline_delimited',
              |       columns = {'r_regionkey': 'INTEGER',
              |                  'meta': 'STRUCT(tier VARCHAR, weight DOUBLE)'}) m
@@ -128,7 +129,7 @@ object Relational {
             StructField("tier", StringType),
             StructField("weight", DoubleType))))))
         val m = spark.read.schema(jschema)
-          .json("/root/repo/fixtures/s4_region_meta.jsonl")
+          .json(Repo.fixture("s4_region_meta.jsonl"))
         ordered(
           t.nation
             .join(broadcast(m), col("n_regionkey") === col("r_regionkey"))

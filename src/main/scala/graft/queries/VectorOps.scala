@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Canon._
 import graft.functions.{Bounded, Centroid, Vectors}
+import graft.Repo
 import graft.sources.Tables
 import graft.Materialize.{CutSyntax, Iter, Shared}
 
@@ -70,7 +71,7 @@ object VectorOps {
               |),
               |icents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |corpus AS (SELECT vec_id, v FROM ed WHERE vec_id >= 20),
               |qd AS (SELECT vec_id AS q_id, v AS qv FROM ed WHERE vec_id < 20),
@@ -104,7 +105,7 @@ object VectorOps {
               |),
               |pcents AS (
               |  SELECT sub, cluster, centroid
-              |  FROM '/root/repo/fixtures/pq_centroids.parquet'
+              |  FROM '${Repo.fixture("pq_centroids.parquet")}'
               |),
               |subs AS (SELECT unnest(range(8)) AS sub),
               |csv AS (
@@ -186,7 +187,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |scored AS (
               |  SELECT e.vec_id, cents.cluster,
@@ -220,7 +221,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
           .select(col("cluster"),
             col("centroid").cast("array<float>").as("centroid"))
         // The SQL side packs its argmax tiebreak as qsim*10000 + (9999 -
@@ -827,7 +828,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |scored AS (
               |  SELECT e.vec_id, cents.cluster, ${cosSql("e.v", "cents.cv")} AS sim
@@ -844,7 +845,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         ordered(graft.functions.Ivf.assign(t.embeddings, cents))
       }
     ),
@@ -862,7 +863,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |corpus AS (SELECT vec_id, v FROM e WHERE vec_id >= 20),
               |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
@@ -908,7 +909,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         val e = t.embeddings
         val ivf = graft.functions.Ivf.index(e.filter(col("vec_id") >= 20), cents)
         val queries = e.filter(col("vec_id") < 20)
@@ -941,7 +942,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |corpus AS (SELECT vec_id, label, v FROM e WHERE vec_id >= 20),
               |q AS (SELECT vec_id AS q_id, v AS qv,
@@ -993,7 +994,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         val e = t.embeddings
         val ivf = graft.functions.Ivf.index(e.filter(col("vec_id") >= 20), cents)
         val lab = e.filter(col("vec_id") >= 20)
@@ -1045,7 +1046,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |corpus AS (SELECT vec_id, v FROM e WHERE vec_id >= 20),
               |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
@@ -1119,7 +1120,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         val e = t.embeddings
         val corpus = e.filter(col("vec_id") >= 20)
         // the index is consumed by all four probe settings: one build
@@ -1171,7 +1172,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |corpus AS (SELECT vec_id, v FROM e WHERE vec_id >= 5),
               |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
@@ -1206,7 +1207,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         val e = t.embeddings
         val corpus = e.filter(col("vec_id") >= 5)
         val asg = graft.functions.Ivf.assign(corpus, cents)
@@ -1247,7 +1248,7 @@ object VectorOps {
       // a positive mod, so the DuckDB twin re-centers its C-style % below.
       Some(s"""WITH cents AS (
               |  SELECT sub, cluster, centroid
-              |  FROM '/root/repo/fixtures/pq_centroids.parquet'
+              |  FROM '${Repo.fixture("pq_centroids.parquet")}'
               |),
               |sv AS (
               |  SELECT e.vec_id, s.sub,
@@ -1272,7 +1273,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("pq_centroids.parquet"))
         ordered(graft.functions.Pq.assign(t.embeddings, cents, m = 8, dim = 64))
       }
     ),
@@ -1286,7 +1287,7 @@ object VectorOps {
       // only the 40-row rerank join, never the candidate pass.
       Some(s"""WITH cents AS (
               |  SELECT sub, cluster, centroid
-              |  FROM '/root/repo/fixtures/pq_centroids.parquet'
+              |  FROM '${Repo.fixture("pq_centroids.parquet")}'
               |),
               |e AS (SELECT vec_id, embedding FROM embeddings),
               |subs AS (SELECT unnest(range(8)) AS sub),
@@ -1348,7 +1349,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("pq_centroids.parquet"))
         val e = t.embeddings
         val corpus = e.filter(col("vec_id") >= 20)
         val codes = graft.functions.Pq.assign(corpus, cents, m = 8, dim = 64)
@@ -1386,8 +1387,8 @@ object VectorOps {
       ivfpqOracle,
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val ivfCents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
-        val pqCents = spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet")
+        val ivfCents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
+        val pqCents = spark.read.parquet(Repo.fixture("pq_centroids.parquet"))
         val e = t.embeddings
         val corpus = e.filter(col("vec_id") >= 20)
         val queries = e.filter(col("vec_id") < 20)
@@ -1442,8 +1443,8 @@ object VectorOps {
           .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
         val idx = graft.IndexPaths.forSf("ann", dir)
         graft.functions.AnnIndex.writeIndex(corpus,
-          spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet"),
-          spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet"),
+          spark.read.parquet(Repo.fixture("ivf_centroids.parquet")),
+          spark.read.parquet(Repo.fixture("pq_centroids.parquet")),
           idx)
         ordered(
           graft.functions.AnnIndex
@@ -1482,8 +1483,8 @@ object VectorOps {
         // the merge is exercised — not a no-op over prior state
         graft.functions.AnnIndex.writeIndex(
           corpus.filter(pmod(col("vec_id"), lit(7)) =!= 0),
-          spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet"),
-          spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet"),
+          spark.read.parquet(Repo.fixture("ivf_centroids.parquet")),
+          spark.read.parquet(Repo.fixture("pq_centroids.parquet")),
           idx)
         graft.functions.AnnIndex.mergeBatch(spark, idx, batch)
         ordered(
@@ -1530,7 +1531,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |corpus AS (SELECT vec_id, v FROM ed WHERE vec_id >= 20),
               |drifted AS (
@@ -1621,8 +1622,8 @@ object VectorOps {
         val batch = corpus.filter(pmod(col("vec_id"), lit(3)) === 0)
           .select((col("vec_id") + 10000000L).as("vec_id"),
             drift(col("embedding")).as("embedding"))
-        val ivfCents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
-        val pqCents = spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet")
+        val ivfCents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
+        val pqCents = spark.read.parquet(Repo.fixture("pq_centroids.parquet"))
         // "ingest": the pre-drift persisted index (fresh each invocation)
         val idx = graft.IndexPaths.forSf("anndrift", dir)
         graft.functions.AnnIndex.writeIndex(corpus, ivfCents, pqCents, idx)
@@ -1742,7 +1743,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |scored AS (
               |  SELECT e.vec_id, cents.cluster, ${cosSql("e.v", "cents.cv")} AS sim
@@ -1767,7 +1768,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         val e = t.embeddings
         // assignment computed ONCE; both sides of the cluster-local
         // self-join and the final left join read the materialized copy
@@ -1809,7 +1810,7 @@ object VectorOps {
               |),
               |cents AS (
               |  SELECT cluster, [CAST(x AS DOUBLE) FOR x IN centroid] AS cv
-              |  FROM '/root/repo/fixtures/ivf_centroids.parquet'
+              |  FROM '${Repo.fixture("ivf_centroids.parquet")}'
               |),
               |scored AS (
               |  SELECT e.vec_id, cents.cluster, ${cosSql("e.v", "cents.cv")} AS sim
@@ -1841,7 +1842,7 @@ object VectorOps {
               |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val cents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+        val cents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         val e = t.embeddings
         val m = graft.functions.Ivf.assign(e, cents).join(e, "vec_id")
           .select(col("vec_id"), col("cluster"), col("embedding"))

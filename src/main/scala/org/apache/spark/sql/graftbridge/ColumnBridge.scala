@@ -15,7 +15,9 @@ object ColumnBridge {
   /** Execute a LOGICAL-PLAN FRAGMENT as a DataFrame (classic
     * Dataset.ofRows is private[sql]). Used by the ScaleShapeSpec fence
     * to run its reduction-ratio probe on an Aggregate node lifted out
-    * of a query's optimized plan — measurement, not a name list. */
+    * of a query's optimized plan — measurement, not a name list — and
+    * by the test suites to hand each consumer of the once-built query
+    * registry a fresh Dataset over the shared plan. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =

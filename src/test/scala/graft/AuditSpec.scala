@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** Self-verifying engineering audits. The `localCheckpoint` audit note in
@@ -15,12 +15,7 @@ import scala.jdk.CollectionConverters._
   */
 class AuditSpec extends AnyFunSuite {
 
-  private val repo = {
-    // sbt runs tests with cwd = project root; fall back to the absolute
-    // path so the spec also works when forked elsewhere
-    val cand = Seq(Paths.get("").toAbsolutePath, Paths.get("/root/repo"))
-    cand.find(p => Files.exists(p.resolve("BASELINE.md"))).get
-  }
+  private val repo = Repo.root
 
   private def scalaFiles(root: Path): Seq[Path] =
     Files.walk(root).iterator().asScala

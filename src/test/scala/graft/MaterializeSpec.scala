@@ -16,6 +16,19 @@ class MaterializeSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, sf)
       .collect().map(_.toString).toSeq
 
+  /** Runs `body`, then frees only the RDDs it persisted (the reliable
+    * run's Shared cuts are test-scoped). Freeing every persistent RDD
+    * would also drop the localCheckpoint blocks behind plans other
+    * suites still hold, such as `SharedSpark.registry`. */
+  private def releasingOwnRdds[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try body
+    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before(id)) rdd.unpersist(blocking = false)
+    }
+  }
+
   test("reliable flag routes Shared cuts through persist and Iter through checkpoint") {
     assert(!Materialize.reliable)
     import spark.implicits._
@@ -42,17 +55,12 @@ class MaterializeSpec extends AnyFunSuite {
   // disciplines the audit table records.
   for (q <- Seq("d5_dedup_clusters", "d2_bpe_merges", "d6_kmeans_lloyd"))
     test(s"$q is hash-identical under SPARK_GRAFT_RELIABLE") {
-      val local = rows(q)
-      sys.props("graft.reliable") = "1"
-      val reliableRows =
-        try rows(q)
-        finally {
-          sys.props.remove("graft.reliable")
-          // persisted Shared cuts from the reliable run are test-scoped;
-          // free them so later suites see a clean executor
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
+      val (local, reliableRows) = releasingOwnRdds {
+        val local = rows(q)
+        sys.props("graft.reliable") = "1"
+        try (local, rows(q))
+        finally sys.props.remove("graft.reliable")
+      }
       assert(local.nonEmpty)
       assert(local == reliableRows,
         s"reliable path diverged: ${local.size} vs ${reliableRows.size} rows")
@@ -71,7 +79,7 @@ class MaterializeSpec extends AnyFunSuite {
       .select(col("filename"), encode(col("txt"), "UTF-8").as("content"))
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     sys.props("graft.reliable") = "1"
-    try {
+    try releasingOwnRdds {
       val store = new graft.dms.DocStore(spark,
         java.nio.file.Files.createTempDirectory("graft_dms_rel").toString,
         nShards = 4)
@@ -84,10 +92,6 @@ class MaterializeSpec extends AnyFunSuite {
       assert(new String(store.download("a.txt").get, "UTF-8") == "a v2")
       assert(store.versions("b.txt") == Seq(1))
       assert(store.all.count() == 3)
-    } finally {
-      sys.props.remove("graft.reliable")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    } finally sys.props.remove("graft.reliable")
   }
 }

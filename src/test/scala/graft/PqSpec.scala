@@ -16,7 +16,7 @@ class PqSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.01"
   private lazy val emb = graft.sources.Tables(spark, sfDir).embeddings
   private lazy val cents =
-    spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet")
+    spark.read.parquet(Repo.fixture("pq_centroids.parquet"))
 
   test("codebook fixture shape: 8 subspaces x 16 clusters of dim 8") {
     import spark.implicits._
@@ -70,7 +70,7 @@ class PqSpec extends AnyFunSuite {
 
   test("IVF-PQ composite: usable top-1 recall, candidates only from probed lists") {
     import spark.implicits._
-    val ivfCents = spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+    val ivfCents = spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
     val corpus = emb.filter(col("vec_id") >= 20)
     val queries = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -141,7 +141,7 @@ class PqSpec extends AnyFunSuite {
     }
     val trained = recallOf(graft.functions.Ivf.train(e, k = 8, iters = 3))
     val fixture = recallOf(
-      spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet")
+      spark.read.parquet(Repo.fixture("ivf_centroids.parquet"))
         .select(col("cluster"), col("centroid")))
     assert(trained >= fixture - 0.11,
       s"self-trained codebook recall $trained far below fixture $fixture")

@@ -16,6 +16,20 @@ class ScaleShapeSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The registry-wide fences: every shared-registry query except the
+    * named exemptions, counted, so sharing the plans cannot quietly
+    * shrink what a fence covers. Returns the checked queries that
+    * `offends`. */
+  private def sweep(exempt: Set[String])(
+      offends: org.apache.spark.sql.DataFrame => Boolean): Seq[String] = {
+    val checked = registry.keys.toSeq.sorted.filterNot(exempt)
+    assert(checked.size == SparkEntry.queries.size - exempt.size,
+      s"checked ${checked.size} of ${SparkEntry.queries.size} queries " +
+        s"with ${exempt.size} exemptions")
+    info(s"checked ${checked.size} queries (${exempt.size} exempt)")
+    checked.filter(name => offends(registered(name)))
+  }
+
   test("bucketed tables join without a shuffle exchange") {
     import spark.implicits._
     // external tables (explicit path), so the static warehouse dir is moot
@@ -332,14 +346,9 @@ class ScaleShapeSpec extends AnyFunSuite {
       "t38_did" // 1-row day-bounds scalar broadcast onto the bounded
       // (type, day) relation — the t26/t28 midpoint shape
     )
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (fenced(name)) None
-      else {
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
-        if (plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct"))
-          Some(name)
-        else None
-      }
+    val offenders = sweep(fenced) { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct")
     }
     assert(offenders.isEmpty, s"unfenced nested-loop joins in: $offenders")
   }
@@ -359,8 +368,10 @@ class ScaleShapeSpec extends AnyFunSuite {
   test("j14 bucketed co-located join: SMJ with no exchange on either join side") {
     // the registry query writes both sides bucketed on the join key; the
     // join itself must be satisfied by bucket metadata — the only
-    // hash exchange allowed in the plan is the post-join segment aggregate
-    val plan = executedPlan(SparkEntry.queries("j14_bucketed_colocated")(spark, sf))
+    // hash exchange allowed in the plan is the post-join segment aggregate.
+    // Read from the shared registry: rebuilding would rewrite the bucketed
+    // files under the shared plan
+    val plan = executedPlan(registered("j14_bucketed_colocated"))
     assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning(o_custkey") &&
       !plan.contains("Exchange hashpartitioning(c_custkey"),
@@ -953,13 +964,8 @@ class ScaleShapeSpec extends AnyFunSuite {
     assert(fenced.subsetOf(SparkEntry.queries.keySet),
       s"fence exemptions name unregistered queries: " +
         s"${fenced -- SparkEntry.queries.keySet}")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        if (fenced(name)) None
-        else {
-          val lp = fn(spark, sf).queryExecution.optimizedPlan
-          if (emptySpecOffenders(lp).nonEmpty) Some(name) else None
-        }
+    val offenders = sweep(fenced) { df =>
+      emptySpecOffenders(df.queryExecution.optimizedPlan).nonEmpty
     }
     assert(offenders.isEmpty,
       s"corpus-sized empty-partition windows in: $offenders")
@@ -995,13 +1001,8 @@ class ScaleShapeSpec extends AnyFunSuite {
     assert(fenced.subsetOf(SparkEntry.queries.keySet),
       s"fence exemptions name unregistered queries: " +
         s"${fenced -- SparkEntry.queries.keySet}")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        if (fenced(name)) None
-        else {
-          val lp = fn(spark, sf).queryExecution.optimizedPlan
-          if (lowCardOnlyOffenders(lp).nonEmpty) Some(name) else None
-        }
+    val offenders = sweep(fenced) { df =>
+      lowCardOnlyOffenders(df.queryExecution.optimizedPlan).nonEmpty
     }
     assert(offenders.isEmpty,
       s"literal-domain-partitioned corpus windows in: $offenders")
@@ -1042,21 +1043,18 @@ class ScaleShapeSpec extends AnyFunSuite {
         case _ => false
       }
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val lp = fn(spark, sf).queryExecution.optimizedPlan
-        val bad = lp.collect {
-          case j: LJoin if {
-            val eqKeys = j.condition.toSeq.flatMap(_.collect {
-              case EqualTo(l, r) => Seq(l, r)
-            }).flatten
-            val refs = eqKeys.flatMap(_.references.toSeq.map(_.name.toLowerCase))
-            refs.nonEmpty && refs.forall(lowCardCols.contains) &&
-              !(boundedPlan(j.left) || dimSide(j.left)) &&
-              !(boundedPlan(j.right) || dimSide(j.right))
-          } => j
-        }
-        if (bad.nonEmpty) Some(name) else None
+    val offenders = sweep(Set.empty) { df =>
+      df.queryExecution.optimizedPlan.collect {
+        case j: LJoin if {
+          val eqKeys = j.condition.toSeq.flatMap(_.collect {
+            case EqualTo(l, r) => Seq(l, r)
+          }).flatten
+          val refs = eqKeys.flatMap(_.references.toSeq.map(_.name.toLowerCase))
+          refs.nonEmpty && refs.forall(lowCardCols.contains) &&
+            !(boundedPlan(j.left) || dimSide(j.left)) &&
+            !(boundedPlan(j.right) || dimSide(j.right))
+        } => j
+      }.nonEmpty
     }
     assert(offenders.isEmpty,
       s"literal-domain-keyed corpus joins in: $offenders")
@@ -1153,8 +1151,8 @@ class ScaleShapeSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft_ann_idx_spec")
       .toString
     graft.functions.AnnIndex.writeIndex(corpus,
-      spark.read.parquet("/root/repo/fixtures/ivf_centroids.parquet"),
-      spark.read.parquet("/root/repo/fixtures/pq_centroids.parquet"), idx)
+      spark.read.parquet(Repo.fixture("ivf_centroids.parquet")),
+      spark.read.parquet(Repo.fixture("pq_centroids.parquet")), idx)
     val fromIdx = graft.functions.AnnIndex
       .ivfpqSearch(spark, idx, queries, corpus)
     fromIdx.collect() // force AQE final plan

@@ -11,7 +11,8 @@ import graft.sources.Tables
   * against the engine's tables. This spec closes the triangle: for every
   * oracle text that Spark's parser accepts (the ANSI subset — DuckDB-only
   * spellings like `list_*`/`time_bucket`/lambda `->` filters are skipped
-  * adaptively), the Spark-SQL result must equal the DataFrame program's
+  * adaptively; the DuckDB oracle compare, `graft.Verify` + `tools/check.py`,
+  * is their only check), the Spark-SQL result must equal the DataFrame program's
   * result row for row. Since the driver already proves DataFrame == DuckDB
   * on the same text, Spark-SQL == DataFrame closes Spark-SQL == DuckDB
   * transitively — the three-way check without needing DuckDB in-JVM.
@@ -71,7 +72,7 @@ class SqlParitySpec extends AnyFunSuite {
         catch { case _: Exception => skipped += 1; None }
       viaSql.flatMap { sqlRows =>
         ran ::= name
-        val dfRows = norm(SparkEntry.queries(name)(spark, sf))
+        val dfRows = norm(registered(name))
         if (sqlRows == dfRows) None
         else Some(s"$name: spark.sql ${sqlRows.length} rows vs DataFrame ${dfRows.length}; " +
           s"first diff: ${sqlRows.diff(dfRows).headOption.orElse(dfRows.diff(sqlRows).headOption)}")
@@ -81,64 +82,6 @@ class SqlParitySpec extends AnyFunSuite {
     assert(bad.isEmpty, s"SQL-vs-DataFrame mismatches:\n${bad.mkString("\n")}")
     assert(ran.length >= 95,
       s"only ${ran.length} oracle texts ran through spark.sql — front door untested")
-  }
-
-  test("DuckDB-dialect oracle texts, machine-rewritten to ANSI, also match (>=228 required)") {
-    registerViews()
-    var ran = List.empty[String]
-    var skipped = List.empty[String]
-    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, text) =>
-      // only the tranche the raw-parity test skips
-      val rawOk = try { spark.sql(text).queryExecution.analyzed; true }
-                  catch { case _: Exception => false }
-      if (rawOk) None
-      else graft.plans.DuckDialect.toSpark(text).flatMap { rw =>
-        val viaSql =
-          try Some(norm(spark.sql(rw)))
-          catch { case _: Exception => skipped ::= name; None }
-        viaSql.flatMap { sqlRows =>
-          ran ::= name
-          val dfRows = norm(SparkEntry.queries(name)(spark, sf))
-          if (sqlRows == dfRows) None
-          else Some(s"$name: rewritten SQL ${sqlRows.length} rows vs DataFrame ${dfRows.length}; " +
-            s"first diff: ${sqlRows.diff(dfRows).headOption.orElse(dfRows.diff(sqlRows).headOption)}")
-        }
-      } orElse { if (!rawOk) () else (); None }
-    }
-    info(s"dialect parity: ${ran.length} rewritten texts ran; " +
-      s"${skipped.length} rewritten-but-unparseable stay skipped")
-    assert(bad.isEmpty, s"rewritten-SQL-vs-DataFrame mismatches:\n${bad.mkString("\n")}")
-    assert(ran.length >= 228,
-      s"only ${ran.length} rewritten texts ran — the dialect shim regressed")
-  }
-
-  test("the non-front-door remainder is EMPTY: every oracle text has a front-door spelling") {
-    // The ledger: every oracle text is either (a) Spark-parseable raw,
-    // or (b) machine-rewritten by DuckDialect to a text Spark analyzes
-    // (round 13 folded the five WITH RECURSIVE … UNION fixpoint texts
-    // in via recursiveUnroll; round 14 closed the last two —
-    // read_csv/read_json option maps now compile to casting subqueries
-    // over Spark's csv./json. file-table syntax, hash-compared like
-    // every other rewrite). Anything appearing here is a regression in
-    // the shim (or an unrewritten new oracle) and must be triaged, not
-    // ledgered.
-    registerViews()
-    val ledger = Set.empty[String]
-    val outside = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
-      case (name, text) =>
-        val rawOk = try { spark.sql(text).queryExecution.analyzed; true }
-                    catch { case _: Exception => false }
-        val rewrittenOk = !rawOk && graft.plans.DuckDialect.toSpark(text)
-          .exists { rw =>
-            try { spark.sql(rw).queryExecution.analyzed; true }
-            catch { case _: Exception => false }
-          }
-        if (rawOk || rewrittenOk) None else Some(name)
-    }.toSet
-    assert(outside == ledger,
-      s"""front-door remainder drifted —
-         |  new unparsed texts: ${(outside -- ledger).toSeq.sorted.mkString(", ")}
-         |  ledgered but now parseable (update the ledger!): ${(ledger -- outside).toSeq.sorted.mkString(", ")}""".stripMargin)
   }
 
   test("injected SQL functions are bit-equal to their Column-API twins") {
