@@ -1,243 +1,143 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line with per-query wall-clock seconds. */
+/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR
+  * (or the comma-separated GRAFT_BENCH_ONLY subset) and prints one JSON
+  * line, the last line of stdout, with each query's median seconds and
+  * quartiles. Each query gets one untimed warm-up run and then [[Samples]]
+  * timed runs; a stderr line reports each query as it finishes. */
 object Bench {
+
+  /** Timed runs per query, after one untimed warm-up run. */
+  val Samples = 3
+
+  /** A query's timing: the median and quartiles of its timed runs in
+    * seconds. A query whose run failed has all three set to minus that
+    * run's seconds, so a crash never reads as fast. */
+  final case class Summary(value: Double, q1: Double, q3: Double) {
+    def failed: Boolean = value < 0
+  }
+
+  object Summary {
+    def of(seconds: Seq[Double]): Summary = {
+      val s = seconds.toIndexedSeq.sorted
+      Summary(quantile(s, 0.5), quantile(s, 0.25), quantile(s, 0.75))
+    }
+
+    def failed(runSeconds: Double): Summary = {
+      val v = -math.abs(runSeconds)
+      Summary(v, v, v)
+    }
+  }
+
+  /** Linear-interpolated quantile of sorted values (p in [0, 1]); the
+    * same definition as the benchmark harness's `Stat.quantile`. */
+  private def quantile(sorted: IndexedSeq[Double], p: Double): Double =
+    if (sorted.isEmpty) 0.0
+    else {
+      val h = (sorted.length - 1) * p
+      val lo = math.floor(h).toInt
+      val hi = math.min(lo + 1, sorted.length - 1)
+      sorted(lo) + (h - lo) * (sorted(hi) - sorted(lo))
+    }
+
+  /** Calls `run` once untimed, then [[Samples]] times. `run` returns one
+    * run's seconds, negative if it failed; the first failed run ends the
+    * sampling and gives the query's value. */
+  def sample(run: () => Double): Summary = {
+    val (ok, failed) = Iterator.continually(run()).take(1 + Samples).span(_ > 0)
+    val seconds = ok.toList.drop(1)
+    failed.nextOption().fold(Summary.of(seconds))(Summary.failed)
+  }
+
+  private val mapper = new ObjectMapper()
+
+  private def r3(v: Double): Double =
+    BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The result line. `queries`, `q1` and `q3` map each query to seconds;
+    * `failed` and `value` (the sum of the successful medians) come last,
+    * so a capture that keeps only the line's tail still holds them. */
+  def resultLine(sfDir: String, results: Seq[(String, Summary)]): String = {
+    val root = mapper.createObjectNode()
+    root.put("metric", "total").put("unit", "sec").put("sf", sfDir)
+      .put("samples_per_query", Samples)
+    def seconds(field: String)(f: Summary => Double): Unit = {
+      val m = root.putObject(field)
+      results.foreach { case (k, s) => m.put(k, r3(f(s))) }
+    }
+    seconds("queries")(_.value)
+    seconds("q1")(_.q1)
+    seconds("q3")(_.q3)
+    val failed = root.putArray("failed")
+    results.collect { case (k, s) if s.failed => failed.add(k) }
+    root.put("value", r3(results.map(_._2.value).filter(_ > 0).sum))
+    mapper.writeValueAsString(root)
+  }
+
+  /** Only a sweep of the canonical sf0.1 directory (compared by its
+    * normalized basename, so `sf0.1/.` counts and `sf0.12` does not)
+    * rewrites BENCH_FULL.json. */
+  private def isCanonicalSf(sfDir: String): Boolean =
+    Option(java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.getFileName)
+      .exists(_.toString == "sf0.1")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Graft.defaultCpus
-    val spark = Graft.session(master = s"local[$cpus]",
-      appName = "graft-bench") // shuffle partitions: Graft.defaultShuffle
-    // Per-query shuffle/spill telemetry: wall-clock alone cannot
-    // distinguish a plan regression (more bytes moved) from
-    // co-scheduling noise (same bytes, slower box) — round 11 had 21
-    // phantom >1.5x-vs-prior-round rows that were pure load. Task-end
-    // metrics accumulate here and each query reports the delta. The
-    // listener bus is async, so a tail of events can attribute to the
-    // next query — the numbers are diagnostic (plan-shape evidence),
-    // not gated; the release() + System.gc() between queries leaves the
-    // bus ample drain time in practice.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          }
-        }
-      })
+    val only = sys.env.get("GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val spark = Graft.session(master = s"local[${Graft.defaultCpus}]",
+      appName = "graft-bench")
+    type Query = (SparkSession, String) => DataFrame
     // force FULL materialization of every column — under count() Catalyst
     // prunes sorts and projections, understating the verified query
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def run(fn: Query): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // Between-query hygiene: ~30 query impls pin blocks via
-    // localCheckpoint(), and those blocks are NEVER freed by Spark — over
-    // a 200+-query single-JVM sweep they accumulate into GiBs of storage
-    // memory, and the resulting GC pressure inflates whichever queries
-    // run late in the alphabet (observed 3-6x on the t*/sc_* families at
-    // round 5). Each query must be timed against a clean executor, the
-    // same state it would see as a standalone job.
+    // Between runs: query impls pin blocks via localCheckpoint(), which
+    // Spark never frees, and their old-gen garbage would otherwise land as
+    // GC pauses inside the next run's timing. Each run starts clean.
     def release(): Unit = {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
-      // old-gen garbage from the previous query (freed checkpoint blocks,
-      // codegen classes) otherwise lands as GC pauses inside the NEXT
-      // query's timing — observed ~2x inflation on the d3 family mid-sweep
-      // vs isolated runs, reproducing round 5's late-alphabet artifact at
-      // a smaller scale
       System.gc()
     }
-    // stdout carries only the JSON line; failures go to stderr
-    def fail(what: String, e: Throwable): Unit =
-      System.err.println(s"[bench] $what failed: ${Graft.failureLine(e)}")
-    // JIT + parquet-footer warmup so per-query numbers measure the plan,
-    // not first-touch class loading
-    SparkEntry.queries.get("w1_latest_per_key").foreach { fn =>
-      try run(fn) catch { case NonFatal(e) => fail("warmup w1_latest_per_key", e) }
-    }
-    release()
-    // optional comma-separated subset (freezing BASELINE/SCALING rows for
-    // newly added queries without re-running the whole surface)
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
-    // (seconds, shuffle-write MB, spill MB) for one run; telemetry is
-    // the listener delta across the run (first sample per query is kept)
-    def timeOne(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double) = {
-      val (sh0, sp0) = (shuffleBytes.get, spillBytes.get)
+    // seconds of one run, negative if it failed; stdout carries only the
+    // JSON line, so failures go to stderr
+    def timed(name: String, fn: Query): Double = {
       val t0 = System.nanoTime()
-      val ok = try { run(fn); true } catch { case NonFatal(e) => fail(name, e); false }
+      val ok = try { run(fn); true } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${Graft.failureLine(e)}")
+          false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       release()
-      val sh = (shuffleBytes.get - sh0) / 1e6
-      val sp = (spillBytes.get - sp0) / 1e6
-      // failures are marked with a NEGATIVE duration so a crashed query
-      // can never masquerade as a fast success in BASELINE/SCALING rows
-      (if (ok) dt else -dt, sh, sp)
+      if (ok) dt else -dt
     }
-    // Frozen per-query medians from BASELINE.md — the values the driver's
-    // 2x gate compares against. Parsing the human table keeps ONE source
-    // of truth: a re-freeze edits exactly one place.
-    // basename EXACT match (ADVICE r13): a substring test would let a
-    // sweep on sf0.12 (or any path merely containing "sf0.1") mis-price
-    // frozen rows here and clobber BENCH_FULL.json below. Normalized
-    // first (ADVICE r14): "/root/testdata/sf0.1/." or a relative alias
-    // must not silently disable the gate for a genuinely canonical sweep.
-    val isCanonicalSf =
-      java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize
-        .getFileName.toString == "sf0.1"
-    // frozen rows carry (seconds, shuffle-write MB); the shuffle column
-    // is the adjudication signal below — byte-identity separates a load
-    // episode from a plan regression. "—" cells parse as no telemetry.
-    val (frozen, frozenSh): (Map[String, Double], Map[String, Double]) =
-      if (!isCanonicalSf) (Map.empty, Map.empty) else {
-      // frozen rows price sf0.1 only — at other SFs the 1.5x comparison
-      // is meaningless and would resample every row of a scale sweep
-      val row = "\\| ([a-z0-9_]+) \\| ([0-9.]+) \\| ([0-9.—]+) \\|".r
-      try {
-        val p = Seq(java.nio.file.Paths.get("BASELINE.md"), Repo.root.resolve("BASELINE.md"))
-          .find(java.nio.file.Files.exists(_))
-        p.map { f =>
-          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          val ms = row.findAllMatchIn(text).toSeq
-          (ms.map(m => m.group(1) -> m.group(2).toDouble).toMap,
-            ms.flatMap(m => scala.util.Try(m.group(3).toDouble).toOption
-              .map(m.group(1) -> _)).toMap)
-        }.getOrElse((Map.empty, Map.empty))
-      } catch { case NonFatal(e) => fail("BASELINE.md frozen rows", e); (Map.empty, Map.empty) }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_(name)) }
+    val results = selected.zipWithIndex.map { case ((name, fn), i) =>
+      val s = sample(() => timed(name, fn))
+      val what = if (s.failed) f"FAILED after ${-s.value}%.3f s"
+        else f"${s.value}%.3f s (q1 ${s.q1}%.3f, q3 ${s.q3}%.3f)"
+      System.err.println(s"[bench] ${i + 1}/${selected.size} $name $what")
+      name -> s
     }
-    val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (t1, sh, sp) = timeOne(name, fn)
-      // One-shot samples on a shared local[32] box carry ±20-40% load
-      // noise (the gate compares them to frozen multi-run medians), so
-      // any sample slow enough to matter for the 2x gate gets a second
-      // run and we keep the better one — the steady-state cost of the
-      // plan, not the co-scheduling accident. Sub-0.3 s samples cannot
-      // breach any frozen row, so they are not re-run.
-      var samples = List(t1)
-      var shSamples = List(sh)
-      if (t1 > 0.3) {
-        val (t2, sh2, _) = timeOne(name, fn)
-        samples ::= t2; shSamples ::= sh2
-      }
-      (name, fn, samples, shSamples, sh, sp)
-    }
-    // Variance kill for the gate's false-positive class (round-10's
-    // d5_lsh_recall_measured read 3.11x its freeze on a ~2x loaded box
-    // while idle runs sat at 0.96x): any row still above 1.5x its
-    // FROZEN value after the min-of-2 gets two more runs AFTER the whole
-    // sweep — this box's observed load episodes last MINUTES (two full
-    // sweeps each read a different alphabetically-adjacent cluster at
-    // 2-5x, every such row 0.7-1.4x when isolated later), so immediate
-    // re-runs share the spike's fate while deferred ones land in a
-    // different window.
-    //
-    // PUBLISH RULE (round 15 — the round-14 inversion fix): round 12's
-    // "deferred-window min only" assumed the deferred window is clean,
-    // but in round 14's driver sweep the DEFERRED window was itself
-    // loaded: s18_cbo_salt published 4.33 s over byte-identical 1.94 s
-    // originals, and 12 rows crossed the 2x gate that way. The machine
-    // adjudication now decides which window to trust from the SHUFFLE
-    // TELEMETRY, not from sample order:
-    //   - every sample's shuffle-write MB matches the FROZEN row's
-    //     (byte-identity = the load signature — a plan regression that
-    //     costs wall-clock moves more bytes or changes the digest;
-    //     freeze_digests.tsv separately pins the plan): publish the min
-    //     across BOTH windows. load_suspect=true in the artifact.
-    //   - bytes moved differ from the freeze (or no frozen telemetry):
-    //     a plan change cannot be ruled out — publish the MEDIAN of all
-    //     successful samples, the robust central estimate a lucky
-    //     outlier cannot drag down. load_suspect=false.
-    // A real plan regression raises every sample, so min and median
-    // both still trip the gate; a load spike in either window does not.
-    // ALL samples land in the "samples" field so a reader can tell a
-    // bimodal spike (fast+slow mix) from a uniform shift, and the
-    // per-row adjudication lands in "load_suspect" so neither the
-    // driver's gate nor a reader re-derives it by hand. Bounded cost:
-    // suspect rows only, a healthy sweep re-runs nothing here.
-    val results = firstPass.map { case (name, fn, samples0, shs0, sh, sp) =>
-      def best(ss: List[Double]) = {
-        val ok = ss.filter(_ > 0)
-        if (ok.isEmpty) ss.min else ok.min
-      }
-      val suspect = frozen.get(name).exists(f => best(samples0) > 1.5 * f)
-      if (suspect) {
-        val d1 = timeOne(name, fn); val d2 = timeOne(name, fn)
-        val all = List(d1._1, d2._1) ++ samples0
-        val shAll = List(d1._2, d2._2) ++ shs0
-        // byte-identity tolerance: the listener is async (attribution
-        // can bleed a neighbor's tail), so "identical" = within 25% or
-        // 0.15 MB of the frozen shuffle column, on EVERY sample
-        val shuffleMatch = frozenSh.get(name).exists { fsh =>
-          shAll.forall(s => math.abs(s - fsh) <= math.max(0.15, 0.25 * fsh))
-        }
-        val ok = all.filter(_ > 0)
-        val v =
-          if (ok.isEmpty) all.min // all four failed: honest negative
-          else if (shuffleMatch) ok.min
-          else {
-            val s = ok.sorted
-            if (s.size % 2 == 1) s(s.size / 2)
-            else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-          }
-        (name, v, all, sh, sp, Some(shuffleMatch))
-      } else (name, best(samples0), samples0, sh, sp, None)
-    }
-    // 3-decimal rounding: local[32] noise is ±20-40%, sub-ms digits are
-    // pure line-length. The driver's stdout capture keeps only the LAST
-    // ~2000 chars of the line, so the aggregate fields (value, failed)
-    // go at the END where they always survive truncation, and the full
-    // per-query map is ALSO written to BENCH_FULL.json in the repo so a
-    // truncated capture never loses per-query durations.
-    def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v, _, _, _, _) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    // resampled rows: EVERY sample (newest first), so a reader can tell
-    // a bimodal load spike from a uniform regression ("queries" stays
-    // flat numeric for downstream parsers; a missing key = 1-2 samples)
-    val ns = results.collect { case (k, _, ss, _, _, _) if ss.size > 2 =>
-      "\"" + k + "\":[" + ss.map(r3).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    // per-row machine adjudication for every resampled row: true = the
-    // shuffle bytes are byte-identical to the frozen telemetry on every
-    // sample, so the elevation is adjudicated MACHINE LOAD and the
-    // cross-window min was published; false = bytes differ (or no
-    // frozen telemetry), the median was published and a reader should
-    // treat the row as a possible plan change
-    val adj = results.collect { case (k, _, _, _, _, Some(ls)) =>
-      "\"" + k + "\":" + ls
-    }.mkString("{", ",", "}")
-    // plan-shape telemetry (first sample per query): shuffle write MB +
-    // spill MB — a wall-clock jump WITHOUT a byte jump is load, not plan.
-    // APPROXIMATE by construction (ADVICE r12): the SparkListener is
-    // async, so a job finishing right at a query boundary can attribute
-    // its bytes to the neighbor; read these as plan-shape indicators
-    // (zero vs kilobytes vs tens of MB), not accounting-exact values
-    val shm = results.map { case (k, _, _, sh, _, _) => "\"" + k + "\":" + r3(sh) }
-      .mkString("{", ",", "}")
-    val spm = results.collect { case (k, _, _, _, sp, _) if sp > 0.0005 =>
-      "\"" + k + "\":" + r3(sp)
-    }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, v, _, _, _, _) if v < 0 => "\"" + k + "\"" }
-    val total = results.map(_._2).filter(_ > 0).sum
-    val line =
-      s"""{"metric":"total","unit":"sec","sf":"$sfDir","queries":$qs,"resampled":$ns,"load_suspect":$adj,"shuffle_mb":$shm,"spill_mb":$spm,"failed":[${failed.mkString(",")}],"value":${r3(total)}}"""
+    val line = resultLine(sfDir, results)
     // only an UNFILTERED sf0.1 sweep is the repo artifact: a
     // GRAFT_BENCH_ONLY subset or a scale-sweep run must not clobber
     // the full-surface line a later reader takes for the whole bench
-    if (only.isEmpty && isCanonicalSf)
+    if (only.isEmpty && isCanonicalSf(sfDir))
       try java.nio.file.Files.writeString(
         Repo.root.resolve("BENCH_FULL.json"), line + "\n")
-      catch { case NonFatal(e) => fail("BENCH_FULL.json write", e) } // repo may be read-only
+      catch {
+        case NonFatal(e) => // the checkout may be read-only
+          System.err.println(s"[bench] BENCH_FULL.json write failed: ${Graft.failureLine(e)}")
+      }
     println(line)
     spark.stop()
   }

@@ -357,9 +357,7 @@ object Dedup {
     * gives the prefix (a slice), the verify set (a transform) and the
     * size in ONE per-doc aggregate — no window passes, and one
     * materialization (the per-doc index at scale) feeds the candidate
-    * join and both verify sides. Shared with the candidate-volume
-    * recount diagnostic (`graft.CandCount`) so SCALING.md's counts
-    * measure exactly the production join. */
+    * join and both verify sides. */
   private[graft] def prefixIndex(
       docs: DataFrame, shingleWidth: Int, minJaccard: Double): DataFrame = {
     val exploded = docs.widen(col("doc_id"))

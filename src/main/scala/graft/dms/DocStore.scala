@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{Metadata, Text}
-import graft.Materialize.{Barrier, CutSyntax, Shared}
+import graft.Materialize.{Barrier, CutSyntax}
 
 /** The DMS facade: every public entry point of the reference's `DMS`
   * class (src/DMS.py), re-expressed Spark-natively over a parquet-backed
@@ -370,8 +370,8 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
   def scanRegex(pattern: String): DataFrame =
     all.filter(col("filename").rlike(pattern))
 
-  /** Latest-version rows with decoded text — the corpus both search
-    * paths tokenize. */
+  /** Latest-version rows with decoded text — the corpus that search and
+    * the dedup reports read. */
   private def latestText: DataFrame =
     all.withColumn("rn",
         row_number().over(Window.partitionBy(col("filename"))
@@ -380,21 +380,22 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
       .select(col("filename"), col("version"),
         decode(col("content"), "UTF-8").as("text"))
 
-  /** (filename, version, term, tf) postings of a text corpus. */
-  private def postingsOf(corpus: DataFrame): DataFrame =
-    corpus
+  /** Full-text TF-IDF search over latest-version text content — the
+    * Solr replacement (D3). Returns (filename, version, score) ranked.
+    * Builds postings per call from the live store, so it is never stale;
+    * the persisted, incrementally merged index is `TextIndex`. */
+  def search(query: String, topK: Int = 10): DataFrame = {
+    val latest = latestText
+    val postings = latest
       .select(col("filename"), col("version"),
         explode(Text.tokenize(col("text"))).as("term"))
       .groupBy(col("filename"), col("version"), col("term"))
       .agg(count(lit(1)).as("tf"))
-
-  private def scoreAndRank(
-      postings: DataFrame, dfreq: DataFrame, nDocs: DataFrame,
-      query: String, topK: Int): DataFrame = {
+    val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val nDocs = latest.agg(count(lit(1)).as("n_docs"))
     // tokenize the query driver-side (same semantics as Text.tokenize):
-    // isin over literal strings becomes a data-source In filter on the
-    // parquet postings scan, where array_contains(<folded array>, term)
-    // would not push down at all
+    // isin over literal strings pushes below the term aggregates, where
+    // array_contains(<folded array>, term) would not push down at all
     val terms = query.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
     // filter BOTH sides explicitly: at scale dfreq is vocabulary-sized,
     // and only the query's terms should be broadcast
@@ -405,120 +406,6 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
       .groupBy(col("filename"), col("version"))
       .agg(sum(col("tf") * log(col("n_docs").cast("double") / col("df"))).as("score"))
       .orderBy(col("score").desc, col("filename").asc)
-      .limit(topK)
-  }
-
-  /** Full-text TF-IDF search over latest-version text content — the
-    * Solr replacement (D3). Returns (filename, version, score) ranked.
-    * Rebuilds postings per call — exact but re-tokenizes the corpus;
-    * [[buildIndex]] + [[searchIndexed]] is the production shape. */
-  def search(query: String, topK: Int = 10): DataFrame = {
-    val latest = latestText
-    val postings = postingsOf(latest)
-    val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val nDocs = latest.agg(count(lit(1)).as("n_docs"))
-    scoreAndRank(postings, dfreq, nDocs, query, topK)
-  }
-
-  /** Persist the inverted index of the CURRENT latest-version corpus:
-    * postings sorted by term (so parquet row-group min/max statistics
-    * make the per-term search filter skip non-matching row groups — the
-    * on-disk analogue of posting-list seeks), plus the term document
-    * frequencies and corpus size. Stale after writes until rebuilt —
-    * the usual search-index contract. */
-  def buildIndex(): Unit = {
-    val latest = latestText.cut(Shared) // one corpus scan for all four
-    val postings = postingsOf(latest)
-    postings.repartition(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$root/_index/postings")
-    postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$root/_index/dfreq")
-    latest.agg(count(lit(1)).as("n_docs"))
-      .write.mode("overwrite").parquet(s"$root/_index/stats")
-    // positional postings (term-sorted like the tf postings, so the
-    // per-term pushed filter skips non-matching row groups): the extra
-    // relation that upgrades term search to phrase search
-    latest
-      .select(col("filename"), col("version"),
-        posexplode(Text.tokenize(col("text"))).as(Seq("pos", "term")))
-      .repartition(col("term")).sortWithinPartitions(col("term"))
-      .write.mode("overwrite").parquet(s"$root/_index/positions")
-  }
-
-  /** TF-IDF search against the persisted index: reads ONLY postings rows
-    * whose term matches the query (an IN filter pushed to the parquet
-    * scan), never re-tokenizes the corpus. Same ranking as [[search]]
-    * while the index is fresh. */
-  def searchIndexed(query: String, topK: Int = 10): DataFrame = {
-    val postings = spark.read.parquet(s"$root/_index/postings")
-    val dfreq = spark.read.parquet(s"$root/_index/dfreq")
-    val nDocs = spark.read.parquet(s"$root/_index/stats")
-    scoreAndRank(postings, dfreq, nDocs, query, topK)
-  }
-
-  /** Phrase search against the persisted positional index: term i of the
-    * phrase must appear at position p+i of the same (filename, version).
-    * Each term's position list is read with a pushed equality filter
-    * (term-sorted parquet skips other row groups) and the lists join on
-    * aligned positions — the Solr phrase-query capability (DMS.py:350),
-    * never re-tokenizing the corpus. Returns (filename, version, n_hits)
-    * ranked by hit count. */
-  def searchPhrase(phrase: String, topK: Int = 10): DataFrame = {
-    val terms = phrase.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
-    require(terms.nonEmpty, "empty phrase")
-    val pos = spark.read.parquet(s"$root/_index/positions")
-    val first = pos.filter(col("term") === terms.head)
-      .select(col("filename"), col("version"), col("pos"))
-    val matches = terms.zipWithIndex.drop(1).foldLeft(first) { case (acc, (t, i)) =>
-      acc.join(
-          pos.filter(col("term") === t)
-            .select(col("filename").as("f2"), col("version").as("v2"),
-              (col("pos") - i).as("p2")),
-          col("filename") === col("f2") && col("version") === col("v2") &&
-            col("pos") === col("p2"))
-        .select(col("filename"), col("version"), col("pos"))
-    }
-    matches.groupBy(col("filename"), col("version"))
-      .agg(count(lit(1)).as("n_hits"))
-      .orderBy(col("n_hits").desc, col("filename").asc)
-      .limit(topK)
-  }
-
-  private val NdHashes = 8
-  private val NdRowsPerBand = 2
-
-  /** Persist the MinHash band index of the latest-version corpus:
-    * (band_key, corpus_id, corpus_sig), bucketed by band_key on disk so
-    * probe joins read only colliding buckets. The near-dup analogue of
-    * [[buildIndex]] — same freshness contract. */
-  def buildNearDupIndex(): Unit = {
-    import graft.dedup.Dedup
-    val latest = latestText
-      .select(col("filename").as("corpus_id"),
-        Dedup.minhashSigRow(col("text"), 3, NdHashes).as("corpus_sig"))
-      .filter(col("corpus_sig").isNotNull)
-    latest
-      .select(col("corpus_id"), col("corpus_sig"),
-        explode(Dedup.bandKeys(col("corpus_sig"), NdHashes, NdRowsPerBand))
-          .as("band_key"))
-      .repartition(col("band_key")).sortWithinPartitions(col("band_key"))
-      .write.mode("overwrite").parquet(s"$root/_index/neardup")
-  }
-
-  /** Near-dup lookup against the persisted band index: signature the probe
-    * text per row, join only its band buckets, estimate Jaccard from the
-    * signatures riding along — never re-signatures the corpus. Returns
-    * (corpus_id, est_jaccard) ranked, threshold 0.5. */
-  def findNearDups(text: String, topK: Int = 10): DataFrame = {
-    val probe = spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(0L, text))),
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-    graft.streaming.Streams.nearDupCandidates(
-        probe, spark.read.parquet(s"$root/_index/neardup"),
-        shingleWidth = 3, numHashes = NdHashes, rowsPerBand = NdRowsPerBand)
-      .select(col("corpus_id"), col("est_jaccard")).distinct()
-      .orderBy(col("est_jaccard").desc, col("corpus_id").asc)
       .limit(topK)
   }
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Data-layout keys — the write-side half of 100 TB read performance.
@@ -47,13 +47,4 @@ object Layout {
     (0 until bits).map { i =>
       s"((($a >> $i) & 1) << ${2 * i}) + ((($b >> $i) & 1) << ${2 * i + 1})"
     }.mkString(" + ")
-
-  /** Write `df` range-partitioned and sorted by `key` into `numFiles`
-    * files: each file owns a disjoint key range, so file/row-group
-    * min-max statistics turn selective scans into skips. Pair with
-    * [[zValue]] for two-dimensional skipping. */
-  def writeRangeSorted(df: DataFrame, path: String, key: String, numFiles: Int): Unit =
-    df.repartitionByRange(numFiles, col(key))
-      .sortWithinPartitions(col(key))
-      .write.mode("overwrite").parquet(path)
 }

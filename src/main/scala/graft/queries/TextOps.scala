@@ -418,8 +418,7 @@ object TextOps {
         val queryTerms = Seq("spark", "window", "shuffle")
         // postings materialized ONCE: they feed both the score join and
         // dfreq — without the cut the corpus is re-tokenized per consumer
-        // (at scale this is the persisted inverted index,
-        // cf. DocStore.buildIndex)
+        // (at scale this is the persisted inverted index)
         val postings = t.documents
           .select(col("doc_id"), explode(Text.tokenize(col("text"))).as("term"))
           .groupBy(col("doc_id"), col("term"))

@@ -63,7 +63,7 @@ object Streams {
     * persisted corpus (a stream-static equi-join, broadcast/hash like any
     * dim join). Emits (doc_id, corpus_id, est_jaccard) candidates at or
     * above the threshold. The index is refreshed out-of-band like any
-    * search index ([[graft.dms.DocStore.buildNearDupIndex]]).
+    * search index.
     *
     * @param index (band_key, corpus_id, corpus_sig) — one row per band key
     */
@@ -93,7 +93,7 @@ object Streams {
     // NOTE deliberately no dropDuplicates: a pair sharing k bands emits k
     // identical candidate rows, and collapsing them in-stream would need
     // unbounded dedup state. Candidates are a hint stream; batch
-    // consumers (DocStore.findNearDups) distinct() them for free.
+    // consumers distinct() them for free.
   }
 
   /** T16s: streaming DRIFT-MONITOR source — live windowed bucket counts

@@ -162,59 +162,6 @@ class DocStoreSpec extends AnyFunSuite {
     assert(!got.contains("old.txt")) // latest version has no 'spark'
   }
 
-  test("persisted index: searchIndexed matches search, reads only query terms, goes stale until rebuilt") {
-    val s = newStore()
-    s.upload("hit.txt", "spark spark spark window".getBytes)
-    s.upload("meh.txt", "window table row".getBytes)
-    s.buildIndex()
-    val live = s.search("spark window").collect().map(r => (r.getString(0), r.getDouble(2)))
-    val idx = s.searchIndexed("spark window").collect().map(r => (r.getString(0), r.getDouble(2)))
-    assert(idx.toSeq == live.toSeq)
-    // the term predicate reaches the postings parquet scan as a real
-    // data-source In filter ("term" merely appearing in the read schema
-    // would pass a looser contains check even with PushedFilters: [])
-    val plan = s.searchIndexed("spark").queryExecution.executedPlan.toString
-    assert(plan.contains("In(term") || plan.contains("EqualTo(term"),
-      s"term In-filter not pushed to the postings scan:\n$plan")
-    // index is a snapshot: a new upload is invisible until rebuild
-    s.upload("new.txt", "spark spark spark spark spark".getBytes)
-    assert(!s.searchIndexed("spark").collect().map(_.getString(0)).contains("new.txt"))
-    s.buildIndex()
-    assert(s.searchIndexed("spark").collect().map(_.getString(0)).headOption.contains("new.txt"))
-  }
-
-  test("phrase search: adjacent positions only, multi-term, counts hits") {
-    val s = newStore()
-    s.upload("a.txt", "spark window functions beat spark window hacks".getBytes)
-    s.upload("b.txt", "window spark is reversed here".getBytes)
-    s.upload("c.txt", "spark alone and window alone".getBytes)
-    s.buildIndex()
-    // bigram: both occurrences in a.txt count; b.txt is reversed, c.txt split
-    val hits = s.searchPhrase("spark window").collect()
-      .map(r => (r.getString(0), r.getLong(2)))
-    assert(hits.toSeq == Seq(("a.txt", 2L)))
-    // trigram spans the first occurrence only
-    val tri = s.searchPhrase("spark window functions").collect()
-      .map(r => (r.getString(0), r.getLong(2)))
-    assert(tri.toSeq == Seq(("a.txt", 1L)))
-    assert(s.searchPhrase("window hacks beat").isEmpty)
-  }
-
-  test("near-dup index: findNearDups ranks the overlapping doc, skips others") {
-    val s = newStore()
-    val base = (1 to 30).map(i => s"tok$i").mkString(" ")
-    s.upload("orig.txt", base.getBytes)
-    s.upload("other.txt", (100 to 130).map(i => s"z$i").mkString(" ").getBytes)
-    s.buildNearDupIndex()
-    val probe = ((1 to 28).map(i => s"tok$i") ++ Seq("xx", "yy")).mkString(" ")
-    val got = s.findNearDups(probe).collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-    assert(got.map(_._1).toSeq == Seq("orig.txt"))
-    assert(got.head._2 >= 0.5)
-    // an unrelated probe matches nothing
-    assert(s.findNearDups("totally different words here entirely").isEmpty)
-  }
-
   test("dedupClusters groups transitively; duplicatedSpanReport flags shared runs") {
     import spark.implicits._
     val s = newStore()

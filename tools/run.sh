@@ -2,7 +2,7 @@
 # Run a graft main class directly on the compiled classes + Spark jars
 # (much faster than going through sbt). Usage:
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
-#   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Bench
+#   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Bench   # progress on stderr, JSON line last on stdout
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
