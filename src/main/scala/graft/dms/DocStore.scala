@@ -1,7 +1,8 @@
 package graft.dms
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,12 +30,19 @@ import graft.Materialize.{Barrier, CutSyntax}
   * | delete_all_version(f)   :394-405  | [[deleteAllVersions]]    |
   * | delete_all()            :407-419  | [[truncate]]             |
   *
-  * Storage: snapshot generations. Data lives under `root/g<N>/` parquet;
-  * `root/_current` names the live generation. Appends add files to the
-  * live generation; rewrites (delete/update/truncate) plan against g<N>,
-  * write g<N+1>, then atomically flip the pointer — no read-overwrite
-  * conflict, readers of an old generation are unaffected, and the layout
-  * is the same manifest-pointer idea production table formats use. All
+  * Storage: snapshot generations with shard-scoped copy-on-write. Data
+  * lives under `root/g<N>/shard=<k>/batch=<id>/` parquet; `root/_current`
+  * names the live generation. Appends add files to the live generation.
+  * A rewrite (update/delete/compact/truncate) writes g<N+1> for only the
+  * shards it touches, hard-links every file of the other shards of g<N>
+  * into g<N+1>, then atomically flips the pointer: changing one row
+  * writes one shard, not the store. Readers of an old generation are
+  * unaffected, and the layout is the same manifest-pointer idea
+  * production table formats use. Parquet files are never modified in
+  * place, so a file shared by several generations stays valid while any
+  * of them is live, and [[vacuum]] of an old generation only drops its
+  * links. The store therefore needs a local filesystem that supports
+  * hard links, as it already does for `_current` and [[vacuum]]. All
   * mutations are DataFrame plans (anti-joins, window dedup), never
   * driver-side row loops; only the single-document ingest path
   * materializes one row on the driver, which is its natural home.
@@ -132,19 +140,46 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     * partition directories. */
   def all: DataFrame = {
     val dir = Paths.get(genDir(currentGen))
-    if (Files.exists(dir) && Files.list(dir).findFirst().isPresent)
+    if (Files.exists(dir) && closing(Files.list(dir))(_.hasNext))
       spark.read.schema(storedSchema).parquet(dir.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storedSchema)
   }
 
-  /** Rewrite path: plan `df` against the live generation, write the next
-    * generation (sharded), flip the pointer. */
-  private def rewrite(df: DataFrame): Unit = {
-    val next = currentGen + 1
-    df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  /** Runs `f` on the paths of a `Files.list` or `Files.walk` stream and
+    * closes it, so no directory handle outlives the call. */
+  private def closing[A](s: java.util.stream.Stream[Path])(f: Iterator[Path] => A): A =
+    try f(s.iterator().asScala) finally s.close()
+
+  /** The `shard=<k>` directories of generation `g`, by shard. */
+  private def shardDirs(g: Int): Map[Int, Path] = {
+    val dir = Paths.get(genDir(g))
+    if (!Files.exists(dir)) Map.empty
+    else closing(Files.list(dir))(_
+      .map(p => p -> p.getFileName.toString)
+      .collect { case (p, n) if n.startsWith("shard=") => n.stripPrefix("shard=").toInt -> p }
+      .toMap)
+  }
+
+  /** Copy-on-write of `shards` only: write generation g+1 of those shards
+    * from `f` applied to their live rows, hard-link every file of the
+    * other shards of g into g+1, then flip the pointer. `f` must keep each
+    * row in its shard. A crash before the flip leaves g live; the next
+    * rewrite's overwrite clears the partial g+1. */
+  private def rewriteShards(shards: Set[Int])(f: DataFrame => DataFrame): Unit = {
+    val g = currentGen
+    val next = g + 1
+    val live = all.filter(col("shard").isin(shards.toSeq: _*))
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    f(live)
       .withColumn("shard", shardUdf(col("filename")))
       .withColumn("batch", lit(s"g$next"))
       .write.partitionBy("shard", "batch").mode("overwrite").parquet(genDir(next))
+    val from = Paths.get(genDir(g))
+    val to = Paths.get(genDir(next))
+    for ((k, dir) <- shardDirs(g) if !shards(k)) closing(Files.walk(dir))(_.foreach { p =>
+      val q = to.resolve(from.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.createLink(q, p)
+    })
     flipTo(next)
   }
 
@@ -244,9 +279,15 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     }
   }
 
-  /** download: content of the latest (or given) version. */
+  /** download: content of the latest (or given) version. The latest is
+    * one shard-pruned top-1 query, not a version lookup then a read. */
   def download(filename: String, version: Option[Int] = None): Option[Array[Byte]] =
-    version.orElse(latestVersion(filename)).flatMap(v => content(filename, v))
+    version match {
+      case Some(v) => content(filename, v)
+      case None =>
+        all.filter(forFile(filename)).orderBy(col("version").desc).limit(1)
+          .select("content").collect().headOption.map(_.getAs[Array[Byte]](0))
+    }
 
   /** update: replace the latest version's content in place (the reference
     * meant to do this and instead wrote the filename string and crashed
@@ -260,46 +301,53 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
         val replacement = spark.createDataFrame(
           spark.sparkContext.parallelize(
             Seq(Row(filename, v, bytes, meta, fileStatusOf(bytes, now), now)), 1), schema)
-        rewrite(all.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-          .filter(!(col("filename") === filename && col("version") === v))
-          .unionByName(replacement))
+        rewriteShards(Set(shardOf(filename)))(
+          _.filter(!(col("filename") === filename && col("version") === v))
+            .unionByName(replacement))
         true
     }
 
-  /** delete one (filename, version) — anti-join rewrite (S8). */
+  /** delete one (filename, version) — anti-join rewrite of its shard (S8). */
   def delete(filename: String, version: Int): Unit =
-    rewrite(all.filter(!(col("filename") === filename && col("version") === version)))
+    rewriteShards(Set(shardOf(filename)))(
+      _.filter(!(col("filename") === filename && col("version") === version)))
 
   /** delete every version of a file. Exact filename equality — the
     * reference's unanchored-regex match (DMS.py:373) also deleted
     * `bad-a.txt` when asked for `a.txt`. */
   def deleteAllVersions(filename: String): Unit =
-    rewrite(all.filter(col("filename") =!= filename))
+    rewriteShards(Set(shardOf(filename)))(_.filter(col("filename") =!= filename))
 
   /** delete_all: truncate to an empty generation. */
   def truncate(): Unit =
-    rewrite(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+    rewriteShards((0 until nShards).toSet)(_.filter(lit(false)))
 
   /** Latest version per file, numeric (A1/W1). */
   def latestVersions: DataFrame =
     all.groupBy(col("filename")).agg(max(col("version")).as("version"))
 
-  /** Compaction: rewrite the live generation into a fresh one, collapsing
-    * the accumulated per-ingest batch partitions (each CDC micro-batch and
-    * ad-hoc append is its own directory — the price of structurally
-    * idempotent replay) into one densely-packed partition per shard. The
-    * maintenance pass every log-structured table format runs; content is
-    * byte-identical, only the file layout changes. Readers in flight keep
-    * their old generation; [[vacuum]] reclaims it later. */
-  def compact(): Unit = rewrite(all)
+  /** Compaction: rewrite each shard that holds more than one batch
+    * partition into one densely-packed partition, in a fresh generation
+    * (each CDC micro-batch and ad-hoc append is its own directory — the
+    * price of structurally idempotent replay). Shards with one batch are
+    * linked, not rewritten, and a store with no such shard gets no new
+    * generation. The maintenance pass every log-structured table format
+    * runs; content is byte-identical, only the file layout changes.
+    * Readers in flight keep their old generation; [[vacuum]] reclaims it
+    * later. */
+  def compact(): Unit = {
+    val multi = shardDirs(currentGen).collect {
+      case (k, dir) if closing(Files.list(dir))(
+        _.count(_.getFileName.toString.startsWith("batch=")) > 1) => k
+    }.toSet
+    if (multi.nonEmpty) rewriteShards(multi)(identity)
+  }
 
   /** Data files of the live generation (compaction/vacuum observability). */
   def dataFileCount(): Int = {
-    import scala.jdk.CollectionConverters._
     val dir = Paths.get(genDir(currentGen))
     if (!Files.exists(dir)) 0
-    else Files.walk(dir).iterator().asScala
-      .count(p => p.getFileName.toString.endsWith(".parquet"))
+    else closing(Files.walk(dir))(_.count(_.getFileName.toString.endsWith(".parquet")))
   }
 
   /** Garbage-collect superseded generations, keeping the live one plus
@@ -310,11 +358,8 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     val live = currentGen
     val deletable = (0 until math.max(0, live - keep))
       .map(genDir).filter(d => Files.exists(Paths.get(d)))
-    deletable.foreach { d =>
-      import scala.jdk.CollectionConverters._
-      Files.walk(Paths.get(d)).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
-    }
+    deletable.foreach(d =>
+      closing(Files.walk(Paths.get(d)))(_.toSeq.reverse.foreach(Files.deleteIfExists(_))))
     deletable
   }
 
@@ -344,15 +389,14 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
       .drop("rn")
 
   /** Numeric latest version of one file (shard-pruned point lookup). */
-  def latestVersion(filename: String): Option[Int] =
-    all.filter(forFile(filename)).agg(max(col("version")))
-      .collect().headOption.filterNot(_.isNullAt(0)).map(_.getInt(0))
+  def latestVersion(filename: String): Option[Int] = versions(filename).lastOption
 
-  /** All versions of one file, ascending (A2; shard-pruned). */
+  /** All versions of one file, ascending (A2; shard-pruned). One scan job:
+    * a file's versions are few, so they are sorted on the driver rather
+    * than by a range-partitioned `orderBy`, which samples first. */
   def versions(filename: String): Seq[Int] =
-    all.filter(forFile(filename))
-      .select("version").orderBy(col("version"))
-      .collect().toIndexedSeq.map(_.getInt(0))
+    all.filter(forFile(filename)).select("version")
+      .collect().toIndexedSeq.map(_.getInt(0)).sorted
 
   /** Metadata map of one (filename, version) — shard-pruned. */
   def metadata(filename: String, version: Int): Option[Map[String, String]] =
@@ -382,29 +426,34 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
 
   /** Full-text TF-IDF search over latest-version text content — the
     * Solr replacement (D3). Returns (filename, version, score) ranked.
-    * Builds postings per call from the live store, so it is never stale;
-    * the persisted, incrementally merged index is `TextIndex`. */
+    * Scores the live store in one pass per call, so it is never stale:
+    * each distinct query term's tf per document is counted on the token
+    * array, one global aggregate gives n_docs and each term's df, and a
+    * document's score is Σ over its terms with tf > 0 of tf·log(n_docs/df).
+    * Only the query's terms are counted, never the vocabulary. The
+    * persisted, incrementally merged index is `TextIndex`. */
   def search(query: String, topK: Int = 10): DataFrame = {
-    val latest = latestText
-    val postings = latest
-      .select(col("filename"), col("version"),
-        explode(Text.tokenize(col("text"))).as("term"))
-      .groupBy(col("filename"), col("version"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val nDocs = latest.agg(count(lit(1)).as("n_docs"))
-    // tokenize the query driver-side (same semantics as Text.tokenize):
-    // isin over literal strings pushes below the term aggregates, where
-    // array_contains(<folded array>, term) would not push down at all
-    val terms = query.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
-    // filter BOTH sides explicitly: at scale dfreq is vocabulary-sized,
-    // and only the query's terms should be broadcast
-    postings
-      .filter(col("term").isin(terms: _*))
-      .join(broadcast(dfreq.filter(col("term").isin(terms: _*))), "term")
-      .crossJoin(broadcast(nDocs))
-      .groupBy(col("filename"), col("version"))
-      .agg(sum(col("tf") * log(col("n_docs").cast("double") / col("df"))).as("score"))
+    // tokenize the query driver-side (same semantics as Text.tokenize);
+    // a repeated term counts once
+    val terms = query.trim.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+    if (terms.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+        StructField("filename", StringType), StructField("version", IntegerType),
+        StructField("score", DoubleType))))
+    val tf = terms.indices.map(i => col(s"tf$i"))
+    val docs = latestText
+      .select(col("filename"), col("version"), Text.tokenize(col("text")).as("tokens"))
+      .select(col("filename") +: col("version") +: terms.zipWithIndex.map { case (t, i) =>
+        size(filter(col("tokens"), _ === t)).as(s"tf$i") }: _*)
+    val stats = docs.agg(count(lit(1)).as("n_docs"),
+      tf.zipWithIndex.map { case (c, i) => count(when(c > 0, 1)).as(s"df$i") }: _*)
+    // a term with tf > 0 here has df >= 1, so the division is guarded
+    val score = tf.zipWithIndex.map { case (c, i) =>
+      when(c > 0, c * log(col("n_docs").cast("double") / col(s"df$i"))).otherwise(0.0)
+    }.reduce(_ + _)
+    docs.filter(tf.map(_ > 0).reduce(_ || _))
+      .crossJoin(broadcast(stats))
+      .select(col("filename"), col("version"), score.as("score"))
       .orderBy(col("score").desc, col("filename").asc)
       .limit(topK)
   }

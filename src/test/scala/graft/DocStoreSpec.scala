@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dms.DocStore
 
@@ -12,8 +15,32 @@ import graft.dms.DocStore
 class DocStoreSpec extends AnyFunSuite {
   import SharedSpark._
 
-  private def newStore() =
-    new DocStore(spark, Files.createTempDirectory("graft_dms").toString)
+  /** A store and its root directory, for tests that look at generations. */
+  private def newRootedStore(): (DocStore, Path) = {
+    val root = Files.createTempDirectory("graft_dms")
+    (new DocStore(spark, root.toString), root)
+  }
+
+  private def newStore() = newRootedStore()._1
+
+  /** The live generation named by `root/_current`. */
+  private def liveGen(root: Path): Int =
+    new String(Files.readAllBytes(root.resolve("_current")), "UTF-8").trim.toInt
+
+  /** Data files under `dir`, relative to it. */
+  private def parquetFiles(dir: Path): Set[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(dir.relativize).toSet
+    finally s.close()
+  }
+
+  private def contents(df: DataFrame): Set[(String, Int, String)] =
+    df.select("filename", "version", "content").collect()
+      .map(r => (r.getString(0), r.getInt(1), new String(r.getAs[Array[Byte]](2)))).toSet
+
+  private def hits(df: DataFrame): Seq[(String, Int, Double)] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
 
   test("upload assigns 1..n and survives past v10 (numeric, not string, order)") {
     val s = newStore()
@@ -160,6 +187,97 @@ class DocStoreSpec extends AnyFunSuite {
     val got = s.search("spark").collect().map(_.getString(0))
     assert(got.headOption.contains("hit.txt"))
     assert(!got.contains("old.txt")) // latest version has no 'spark'
+  }
+
+  test("search scores tf*log(N/df) exactly; repeated terms count once; empty query is empty") {
+    val s = newStore()
+    s.upload("a.txt", "zebra".getBytes) // v1 is shadowed: zebra is in no latest doc
+    s.upload("a.txt", "spark spark window".getBytes)
+    s.upload("b.txt", "window table".getBytes)
+    s.upload("c.txt", "spark row".getBytes)
+    val idf = math.log(3.0 / 2.0) // N = 3 latest docs, df(spark) = df(window) = 2
+    def check(q: String, want: Seq[(String, Int, Double)]): Unit = {
+      val got = hits(s.search(q))
+      assert(got.map(h => (h._1, h._2)) == want.map(h => (h._1, h._2)), q)
+      got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) < 1e-12, s"$q: $got") }
+    }
+    check("spark zebra", Seq(("a.txt", 2, 2 * idf), ("c.txt", 1, idf)))
+    // equal scores are ordered by filename
+    check("window", Seq(("a.txt", 2, idf), ("b.txt", 1, idf)))
+    assert(hits(s.search("spark spark")) == hits(s.search("spark")))
+    for (q <- Seq("", "   ")) {
+      val df = s.search(q)
+      assert(df.schema.map(f => (f.name, f.dataType)) ==
+        Seq(("filename", StringType), ("version", IntegerType), ("score", DoubleType)))
+      assert(df.collect().isEmpty, s"query '$q'")
+    }
+  }
+
+  test("delete rewrites one shard; the others are hard links that survive vacuum") {
+    val (s, root) = newRootedStore()
+    (0 until 8).foreach(i => s.upload(s"f$i.txt", s"body $i".getBytes))
+    s.upload("f1.txt", "body 1 v2".getBytes)
+    val before = s.all
+    val rowsBefore = contents(before)
+    val g = liveGen(root)
+    s.delete("f0.txt", 1)
+    assert(liveGen(root) == g + 1)
+    val (oldDir, newDir) = (root.resolve(s"g$g"), root.resolve(s"g${g + 1}"))
+    val touched = s"shard=${s.shardOf("f0.txt")}"
+    val others = parquetFiles(oldDir).filterNot(_.startsWith(touched))
+    assert(others.nonEmpty)
+    assert(parquetFiles(newDir).filterNot(_.startsWith(touched)) == others)
+    others.foreach(p => assert(Files.isSameFile(oldDir.resolve(p), newDir.resolve(p)), p))
+    // a frame built before the delete still reads the old generation
+    assert(contents(before) == rowsBefore)
+    val rowsAfter = rowsBefore.filterNot(_._1 == "f0.txt")
+    assert(contents(s.all) == rowsAfter)
+    s.vacuum(keep = 0)
+    assert(!Files.exists(oldDir))
+    assert(contents(s.all) == rowsAfter)
+    assert(s.versions("f1.txt") == Seq(1, 2) && s.download("f0.txt").isEmpty)
+    assert(new String(s.download("f1.txt").get) == "body 1 v2")
+    assert(new String(s.content("f1.txt", 1).get) == "body 1")
+  }
+
+  test("compact rewrites only multi-batch shards and is a no-op without them") {
+    import spark.implicits._
+    val (s, root) = newRootedStore()
+    // one batch: every shard holds a single batch partition
+    s.uploadBatch((0 until 6).map(i => (s"f$i.txt", s"doc $i".getBytes)).toDF("filename", "content"),
+      new java.sql.Timestamp(0L))
+    val g = liveGen(root)
+    s.compact()
+    assert(liveGen(root) == g)
+    s.upload("f2.txt", "doc 2 v2".getBytes) // f2's shard now holds two batches
+    val files = parquetFiles(root.resolve(s"g$g"))
+    val rows = contents(s.all)
+    s.compact()
+    assert(liveGen(root) == g + 1)
+    val touched = s"shard=${s.shardOf("f2.txt")}"
+    assert(parquetFiles(root.resolve(s"g${g + 1}")).filterNot(_.startsWith(touched)) ==
+      files.filterNot(_.startsWith(touched)))
+    assert(contents(s.all) == rows)
+    s.compact()
+    assert(liveGen(root) == g + 1)
+  }
+
+  test("a partial next generation left by a crash changes no read and is replaced") {
+    val (s, root) = newRootedStore()
+    (0 until 4).foreach(i => s.upload(s"f$i.txt", s"body $i".getBytes))
+    val g = liveGen(root)
+    // a rewrite that died between its write and its flip: a g+1 with junk
+    // in a shard the next rewrite does not touch
+    val other = (0 until 16).find(_ != s.shardOf("f0.txt")).get
+    val junk = root.resolve(s"g${g + 1}/shard=$other/batch=g${g + 1}/part-00000-junk.parquet")
+    Files.createDirectories(junk.getParent)
+    Files.write(junk, "not parquet".getBytes)
+    val rows = contents(s.all)
+    assert(rows.size == 4 && s.versions("f1.txt") == Seq(1))
+    assert(new String(s.download("f1.txt").get) == "body 1")
+    s.delete("f0.txt", 1)
+    assert(liveGen(root) == g + 1 && !Files.exists(junk))
+    assert(contents(s.all) == rows.filterNot(_._1 == "f0.txt"))
   }
 
   test("dedupClusters groups transitively; duplicatedSpanReport flags shared runs") {
