@@ -25,6 +25,9 @@ object Canon {
     */
   def tstr(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
+  /** Microsecond-precision rendering (event ts granularity). */
+  def tus(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+
   /** Total order over every output column, left to right, NULLS FIRST —
     * mirrored by `ORDER BY ALL NULLS FIRST` on the DuckDB side.
     */

@@ -6,24 +6,21 @@ import graft.Canon._
 import graft.functions.Bounded
 import graft.sources.Tables
 import graft.Materialize.{CutSyntax, Shared}
+import graft.streaming.Streams
 
 /** Event-time operators over the events table — SURVEY.md §2.10.
   *
-  * These are the BATCH equivalents of the streaming surface: the exact
-  * same expressions run under `readStream` in [[graft.streaming.Streams]]
-  * (verified with MemoryStream in StreamingSpec); here they run on the
-  * batch relation so the DuckDB oracle can hash-check the semantics —
+  * The windowed rows (t1, t2, t3, t7, t9, t28) call the streaming
+  * transforms of [[graft.streaming.Streams]] on the batch relation, so
+  * the DuckDB oracle hash-checks the one spelling a stream also runs —
   * window alignment, session gap boundaries (new session iff
-  * gap >= threshold), dedup keeper choice.
+  * gap >= threshold) — and the row adds only the oracle-facing
+  * rendering. The other rows are batch-only event-time operators.
   *
   * Money-style sums go through decimal(18,4) so the result is independent
   * of partition/accumulation order — double sums are neither.
   */
 object EventOps {
-
-  /** Microsecond-precision timestamp rendering (event ts granularity). */
-  private def tus(c: org.apache.spark.sql.Column) =
-    date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
 
   val all: Seq[Q] = Seq(
     Q(
@@ -35,15 +32,12 @@ object EventOps {
              |ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
+        // exact decimal sum (order-independent), one cast back to double
+        // at the end so both engines emit a float column
         ordered(
-          t.events
-            .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              // exact decimal sum (order-independent), one cast back to
-              // double at the end so both engines emit a float column
-              sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-            .select(tstr(col("w.start")).as("w_start"), col("event_type"),
-              col("n"), col("total"))
+          Streams.tumblingCounts(t.events)
+            .select(tstr(col("w_start")).as("w_start"), col("event_type"),
+              col("n"), col("total").cast("double").as("total"))
         )
       }
     ),
@@ -60,11 +54,8 @@ object EventOps {
       (spark, dir) => {
         val t = Tables(spark, dir)
         ordered(
-          t.events
-            .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"),
-              col("event_type"))
-            .agg(count(lit(1)).as("n"))
-            .select(tstr(col("w.start")).as("w_start"), col("event_type"), col("n"))
+          Streams.slidingCounts(t.events)
+            .select(tstr(col("w_start")).as("w_start"), col("event_type"), col("n"))
         )
       }
     ),
@@ -97,11 +88,9 @@ object EventOps {
       (spark, dir) => {
         val t = Tables(spark, dir)
         ordered(
-          t.events
-            .groupBy(session_window(col("ts"), "30 minutes").as("s"), col("user_id"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(col("user_id"), tus(col("s.start")).as("s_start"),
-              tus(col("s.end")).as("s_end"), col("n_events"))
+          Streams.sessionCounts(t.events)
+            .select(col("user_id"), tus(col("s_start")).as("s_start"),
+              tus(col("s_end")).as("s_end"), col("n_events"))
         )
       }
     ),
@@ -197,8 +186,7 @@ object EventOps {
       (spark, dir) => {
         val t = Tables(spark, dir)
         ordered(
-          t.events
-            .join(broadcast(t.customer), col("user_id") === col("c_custkey"))
+          Streams.enrich(t.events, broadcast(t.customer), "user_id", "c_custkey")
             .groupBy(col("c_mktsegment"), col("event_type"))
             .agg(count(lit(1)).as("n"),
               sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
@@ -221,7 +209,7 @@ object EventOps {
       (spark, dir) => {
         val t = Tables(spark, dir)
         ordered(
-          graft.streaming.Streams.attributionJoin(
+          Streams.attributionJoin(
             t.events.filter(col("event_type") === "view"),
             t.events.filter(col("event_type") === "click"))
         )
@@ -2029,10 +2017,7 @@ object EventOps {
              |FROM s ORDER BY ALL NULLS FIRST""".stripMargin),
       (spark, dir) => {
         val t = Tables(spark, dir)
-        val c = t.events.filter(col("event_type") === "error")
-          .groupBy(expr("unix_micros(ts) DIV 86400000000").as("d"))
-          .agg(count(lit(1)).as("n"))
-        ordered(hysteresis(c))
+        ordered(hysteresis(Streams.dailyCounts(t.events, "error")))
       }
     ),
     Q(

@@ -4,11 +4,29 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-/** Structured Streaming surface — SURVEY.md §2.10. The transforms are the
-  * SAME expressions as the batch EventOps queries; only the source/sink
-  * differ, which is the whole point of the unified Dataset API. StreamingSpec
-  * drives them with MemoryStream and asserts batch equivalence; a file
-  * source works identically via [[eventsFileStream]].
+/** Structured Streaming surface — SURVEY.md §2.10. Each transform is a
+  * function from a DataFrame to a DataFrame, so one spelling serves a
+  * stream and a batch table alike (`withWatermark` is a no-op on batch
+  * input). These functions are what registered, oracle-checked queries
+  * call on the batch tables:
+  *
+  *   - T1 [[tumblingCounts]] (`t1_tumbling_window`), T2 [[slidingCounts]]
+  *     (`t2_sliding_window`), T3 [[sessionCounts]] (`t3_session_window`);
+  *   - T7 [[enrich]] (`t7_stream_static_join`), T9 [[attributionJoin]]
+  *     (`t9_interval_attrib`);
+  *   - T28 [[dailyCounts]] under [[graft.queries.EventOps.hysteresis]]
+  *     (`t28_hysteresis`);
+  *   - a6 [[heavyHittersStream]] + [[runToMemory]]
+  *     (`a6_heavy_hitters_stream`).
+  *
+  * StreamingSpec replays the event log through T1, T2, T3 and T28 and
+  * compares each sink with the registered row. No registered query calls
+  * the streams below, so the oracle does not see their code: T5
+  * [[sessionStream]] (its spec replays the log against
+  * `t3_session_window`), T6 [[dedupEvents]], T10 [[statefulFunnel]], T15
+  * [[newUserCounts]] / [[newUserCountsIndexed]], T16s
+  * [[psiBucketCounts]], W19 [[bollingerStream]], [[novelDocs]],
+  * [[bloomGatedIngest]], [[mediaIngestStream]] and [[docStoreIngest]].
   *
   * Scale design: every aggregation carries a watermark so state is bounded
   * (late rows beyond the threshold are dropped, finished windows evicted) —
@@ -48,53 +66,22 @@ object Streams {
       .select(col("s.start").as("s_start"), col("s.end").as("s_end"),
         col("user_id"), col("n_events"))
 
-  /** T6: exactly-once event dedup by id within the watermark horizon. */
+  /** T6: exactly-once event dedup by id within the watermark horizon.
+    * Each id's state entry expires once the watermark passes its first
+    * row's event time; a plain `dropDuplicates("event_id")` would keep
+    * every id forever, since its key has no event-time column. */
   def dedupEvents(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes").dropDuplicates("event_id")
+    dedupWithinWatermark(events.withWatermark("ts", "10 minutes"), "event_id")
+
+  /** Dedup on `key` whose state entry expires once the watermark passes
+    * the key's first row. Spark rejects `dropDuplicatesWithinWatermark`
+    * on batch input, where a plain dedup is the same result. */
+  private def dedupWithinWatermark(df: DataFrame, key: String): DataFrame =
+    if (df.isStreaming) df.dropDuplicatesWithinWatermark(key) else df.dropDuplicates(key)
 
   /** T7: stream-static enrichment join (static side broadcast by Catalyst). */
   def enrich(events: DataFrame, dim: DataFrame, eventKey: String, dimKey: String): DataFrame =
     events.join(dim, col(eventKey) === col(dimKey))
-
-  /** Streaming near-dup detection — the in-flight D5 shape: each incoming
-    * doc computes its MinHash signature and band keys PER ROW (stateless
-    * column expressions — no shuffle, no state store, state never grows
-    * with stream length) and probes the static band index of the
-    * persisted corpus (a stream-static equi-join, broadcast/hash like any
-    * dim join). Emits (doc_id, corpus_id, est_jaccard) candidates at or
-    * above the threshold. The index is refreshed out-of-band like any
-    * search index.
-    *
-    * @param index (band_key, corpus_id, corpus_sig) — one row per band key
-    */
-  def nearDupCandidates(
-      docs: DataFrame, // (doc_id, text)
-      index: DataFrame,
-      shingleWidth: Int = 3,
-      numHashes: Int = 8,
-      rowsPerBand: Int = 2,
-      minEstJaccard: Double = 0.5): DataFrame = {
-    import graft.dedup.Dedup
-    val sig = Dedup.minhashSigRow(col("text"), shingleWidth, numHashes)
-    docs
-      .withColumn("sig", sig)
-      .filter(col("sig").isNotNull)
-      .select(col("doc_id"), col("sig"),
-        explode(Dedup.bandKeys(col("sig"), numHashes, rowsPerBand)).as("band_key"))
-      .join(index, "band_key")
-      // string-compare the ids: stream and corpus id types may differ
-      // (long doc ids probing a filename-keyed index), and ANSI mode
-      // faults a long<->string cast
-      .filter(col("doc_id").cast("string") =!= col("corpus_id").cast("string"))
-      .select(col("doc_id"), col("corpus_id"),
-        (size(filter(zip_with(col("sig"), col("corpus_sig"), (p, q) => p === q),
-          m => m)) / lit(numHashes.toDouble)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard)
-    // NOTE deliberately no dropDuplicates: a pair sharing k bands emits k
-    // identical candidate rows, and collapsing them in-stream would need
-    // unbounded dedup state. Candidates are a hint stream; batch
-    // consumers distinct() them for free.
-  }
 
   /** T16s: streaming DRIFT-MONITOR source — live windowed bucket counts
     * of a feature distribution against FROZEN reference bins (lo/width
@@ -116,13 +103,12 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("bucket"), col("n"))
 
-  /** T28, streaming half: watermarked daily counts of a filtered event
+  /** T28's day counts: watermarked daily counts of a filtered event
     * stream — the live feed of the hysteresis alert monitor. State is one
     * counter per open day-window regardless of stream length; the alert
     * state machine itself ([[graft.queries.EventOps.hysteresis]]) stays a
-    * stateless transform over the tiny sink relation, exactly as the
-    * batch t28 computes it (StreamingSpec replays the real event log and
-    * matches the batch alerts cell for cell). */
+    * stateless transform over the tiny sink relation. `t28_hysteresis`
+    * runs both on the batch events table. */
   def dailyCounts(events: DataFrame, eventType: String): DataFrame =
     events
       .filter(col("event_type") === eventType)
@@ -199,13 +185,14 @@ object Streams {
     * index recurring BEYOND the horizon re-counts until the index
     * refresh lands — the standard CDC trade, identical to the batch
     * curve whenever refresh cadence ≤ horizon. */
-  def newUserCountsIndexed(events: DataFrame, knownUsers: DataFrame): DataFrame =
-    events.select(col("user_id"), col("ts"), to_date(col("ts")).as("day"))
+  def newUserCountsIndexed(events: DataFrame, knownUsers: DataFrame): DataFrame = {
+    val unindexed = events.select(col("user_id"), col("ts"), to_date(col("ts")).as("day"))
       .withWatermark("ts", "10 minutes")
       .join(knownUsers.select(col("user_id")), Seq("user_id"), "left_anti")
-      .dropDuplicates("user_id")
+    dedupWithinWatermark(unindexed, "user_id")
       .groupBy(col("day"))
       .agg(count(lit(1)).as("new_users"))
+  }
 
   /** Bloom-gated ingest: flag each streamed doc against a STATIC corpus
     * Bloom filter ([[graft.dedup.Dedup.bloomWords]]) — stateless per
@@ -243,39 +230,9 @@ object Streams {
     s"pmod(cast(conv(substring(md5(concat('$seed:', $keyCol)), 1, 15), 16, 10) " +
       s"as bigint), ${words * 62L})"
 
-  /** One running session per user for T5 mapGroupsWithState. */
+  /** One running session per user for [[sessionStream]]. */
   case class SessionState(start: Long, lastTs: Long, n: Long)
   case class SessionOut(userId: Long, startMicros: Long, endMicros: Long, nEvents: Long)
-
-  /** T5: custom stateful sessionization with event-time timeout — the
-    * escape hatch for session logic `session_window` can't express
-    * (per-event predicates, session caps, custom emission).
-    */
-  def statefulSessions(
-      events: Dataset[(Long, Long)], // (user_id, ts_micros)
-      gapMicros: Long = 30L * 60 * 1000000
-  ): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state: GroupState[SessionState]) =>
-          // batch-mode contract: all rows for the key arrive at once
-          val sorted = rows.map(_._2).toSeq.sorted
-          val (closed, last) = sorted.foldLeft(
-            (Vector.empty[SessionOut], Option.empty[SessionState])) {
-            case ((done, None), ts) => (done, Some(SessionState(ts, ts, 1)))
-            case ((done, Some(s)), ts) =>
-              if (ts - s.lastTs >= gapMicros)
-                (done :+ SessionOut(userId, s.start, s.lastTs + gapMicros, s.n),
-                  Some(SessionState(ts, ts, 1)))
-              else (done, Some(s.copy(lastTs = ts, n = s.n + 1)))
-          }
-          (closed ++ last.map(s =>
-            SessionOut(userId, s.start, s.lastTs + gapMicros, s.n))).iterator
-      }
-  }
 
   /** Per-user funnel progress for [[statefulFunnel]]: −1 = stage unset. */
   case class FunnelState(v: Long, c: Long, p: Long)
@@ -319,14 +276,16 @@ object Streams {
       }
   }
 
-  /** T5, truly incremental: sessionization that is correct when a user's
-    * events arrive across MANY micro-batches (the batch-contract
-    * [[statefulSessions]] assumes one delivery per key). State carries the
+  /** T5, truly incremental: the custom-state spelling of T3's sessions
+    * (the escape hatch for session logic `session_window` can't express:
+    * per-event predicates, session caps, custom emission), correct when a
+    * user's events arrive across MANY micro-batches. State carries the
     * open session; each batch merges new events in event-time order —
     * a gap >= `gapMicros` closes the open session and starts a new one —
     * and an EVENT-TIME TIMEOUT closes idle sessions once the watermark
     * passes session end, so state is bounded and sessions are emitted
-    * even if the user never returns.
+    * even if the user never returns. StreamingSpec replays the event log
+    * and matches `t3_session_window` session for session.
     */
   def sessionStream(
       events: DataFrame, // needs user_id, ts (watermarked by caller or here)
@@ -347,7 +306,9 @@ object Streams {
             state.remove()
             Iterator(SessionOut(userId, s.start, s.lastTs + gapMicros, s.n))
           } else {
-            val sorted = rows.map(_._2.getTime * 1000L).toSeq.sorted // micros
+            val sorted = rows.map { case (_, t) => // micros, sub-ms kept
+              Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+            }.toSeq.sorted
             val closed = Vector.newBuilder[SessionOut]
             var open = state.getOption
             sorted.foreach { ts =>
@@ -408,9 +369,6 @@ object Streams {
         col("wav.smp_sum").as("smp_sum"))
   }
 
-  /** T8: drive a stream to a memory sink until idle; returns the sink table
-    * name to query. AvailableNow processes everything then stops — the
-    * batch-parity trigger. */
   /** The idempotent micro-batch body of [[docStoreIngest]], visible so a
     * spec can replay a batch id and assert the no-op. foreachBatch gives
     * at-least-once delivery of (batch, id); the store makes it
@@ -541,6 +499,9 @@ object Streams {
       }
   }
 
+  /** T8: drive a stream to the memory sink `name` until idle; query the
+    * sink as `spark.table(name)`. AvailableNow processes everything then
+    * stops — the batch-parity trigger. */
   def runToMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append()): Unit = {
     val q = df.writeStream
       .format("memory")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, FlatMapGroupsWithState, Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate, DeduplicateWithinWatermark, EventTimeWatermark, FlatMapGroupsWithState, Window => LWindow}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     slices at 100 TB, never a one-task corpus sort);
   *   - every stateful streaming aggregation carries an event-time
   *     WATERMARK (bounded state by construction — unbounded streaming
-  *     state is the stream-side equivalent of a driver collect), and the
+  *     state is the stream-side equivalent of a driver collect), every
+  *     streaming dedup can expire its keys at that watermark, and the
   *     custom-state paths really plan FlatMapGroupsWithState.
   */
 class LibraryFenceSpec extends AnyFunSuite {
@@ -93,15 +94,31 @@ class LibraryFenceSpec extends AnyFunSuite {
       // spelling — newUserCountsIndexed, fenced below, which this spec's
       // first run caught as missing and round 15 implemented
       "newUserCountsIndexed" -> graft.streaming.Streams
-        .newUserCountsIndexed(src, spark.range(0).select(col("id").as("user_id"))))
+        .newUserCountsIndexed(src, spark.range(0).select(col("id").as("user_id"))),
+      "dailyCounts" -> graft.streaming.Streams.dailyCounts(src, "error"),
+      "psiBucketCounts" -> graft.streaming.Streams.psiBucketCounts(src, 0.0, 1.0),
+      "sessionStream" -> graft.streaming.Streams.sessionStream(src).toDF())
     legs.foreach { case (name, df) =>
-      val marks = df.queryExecution.analyzed.collect {
-        case e: EventTimeWatermark => e
-      }
+      val plan = df.queryExecution.analyzed
+      val marks = plan.collect { case e: EventTimeWatermark => e }
       assert(marks.nonEmpty,
         s"Streams.$name has NO event-time watermark — its state store " +
           "would grow without bound")
+      // a plain streaming dedup evicts a key only when the key holds the
+      // watermarked column; on other keys it must dedup within the watermark
+      val unbounded = plan.collect {
+        case d: Deduplicate
+          if !d.keys.exists(_.metadata.contains(EventTimeWatermark.delayKey)) => d
+      }
+      assert(unbounded.isEmpty,
+        s"Streams.$name dedups on ${unbounded.flatMap(_.keys.map(_.name)).mkString(", ")} " +
+          "with no event-time key: its dedup state never expires")
     }
+    // the dedup check above must see the dedup legs it fences
+    val fencedDedups = legs.map(_._2.queryExecution.analyzed.collect {
+      case d: DeduplicateWithinWatermark => d
+    }.size).sum
+    assert(fencedDedups >= 2, s"expected the two dedup legs, found $fencedDedups")
     // both sides of the stream-stream interval join must be watermarked,
     // or Spark keeps every row of the unmarked side forever
     val attributionMarks = graft.streaming.Streams.attributionJoin(src, src)
@@ -112,10 +129,11 @@ class LibraryFenceSpec extends AnyFunSuite {
 
   test("Streams custom-state paths plan FlatMapGroupsWithState") {
     import spark.implicits._
-    val events = Seq((1L, 1000000L), (1L, 2000000L)).toDS()
-    val fm = graft.streaming.Streams.statefulSessions(events)
+    val src = graft.streaming.Streams.eventsFileStream(spark,
+      java.nio.file.Files.createTempDirectory("graft_fence_fm").toString)
+    val fm = graft.streaming.Streams.sessionStream(src)
       .queryExecution.analyzed.collect { case f: FlatMapGroupsWithState => f }
-    assert(fm.nonEmpty, "statefulSessions no longer plans custom state")
+    assert(fm.nonEmpty, "sessionStream no longer plans custom state")
     val funnel = graft.streaming.Streams
       .statefulFunnel(Seq((1L, "view", 1000000L)).toDS())
       .queryExecution.analyzed.collect { case f: FlatMapGroupsWithState => f }

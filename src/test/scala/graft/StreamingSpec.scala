@@ -1,16 +1,22 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
+import graft.Canon.{ordered, tstr, tus}
 import graft.streaming.Streams
 
-/** Structured Streaming semantics — SURVEY.md §2.10. Each test drives a
-  * stream from MemoryStream and asserts against the batch result of the
-  * same transform (the unified-API contract), plus the watermark
-  * late-drop behavior that only exists in streaming.
+/** Structured Streaming semantics — SURVEY.md §2.10. The windowed streams
+  * (T1, T2, T3, T5, T28) replay the real event log in event-time order,
+  * in several micro-batches, and compare the sink with the registered,
+  * oracle-checked query; a test applies only that query's output
+  * rendering to the sink. Other tests drive MemoryStream or file streams
+  * against a batch run of the same transform, plus the behavior that only
+  * exists in streaming: watermark late drops, bounded state,
+  * kill-restart replay and exactly-once sinks.
   */
 /** Top-level so Spark can derive an Encoder (inner classes can't). */
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -23,6 +29,29 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** The sf event log in event-time order. */
+  private lazy val replay: Seq[Ev] = {
+    import spark.implicits._
+    graft.sources.Tables(spark, sf).events
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"), col("props"))
+      .orderBy(col("ts"), col("event_id")).as[Ev].collect().toSeq
+  }
+
+  /** Replays [[replay]] through `transform` into the memory sink `name` in
+    * three micro-batches, then each `flush` batch; returns the sink. */
+  private def replayTo(name: String, id: Int, mode: OutputMode,
+      flush: Seq[Seq[Ev]] = Nil)(transform: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
+    val mem = MemoryStream[Ev](id, spark, None)
+    val q = transform(mem.toDF()).writeStream.format("memory").queryName(name)
+      .outputMode(mode).start()
+    try (replay.grouped((replay.size + 2) / 3).toSeq ++ flush).foreach { b =>
+      mem.addData(b: _*); q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name)
+  }
+
   private val fixture = Seq(
     Ev(0, ts("2024-01-01 00:05:00"), 1, "click", 1.0, "{}"),
     Ev(1, ts("2024-01-01 00:20:00"), 1, "click", 2.0, "{}"),
@@ -33,48 +62,41 @@ class StreamingSpec extends AnyFunSuite {
   )
 
   test("T1 tumbling window: stream (complete mode) equals batch") {
-    import spark.implicits._
-    val mem = MemoryStream[Ev](1, spark, None)
-    mem.addData(fixture: _*)
-    Streams.runToMemory(Streams.tumblingCounts(mem.toDF()), "t1_sink",
-      OutputMode.Complete())
-    val got = spark.table("t1_sink")
-      .select("w_start", "event_type", "n", "total").collect().toSet
-    val want = Streams.tumblingCounts(fixture.toDF())
-      .select("w_start", "event_type", "n", "total").collect().toSet
-    assert(got == want && got.nonEmpty)
+    val sink = replayTo("t1_sink", 101, OutputMode.Complete())(Streams.tumblingCounts)
+    // the row's rendering: formatted window start, decimal total as double
+    val got = ordered(sink.select(tstr(col("w_start")).as("w_start"),
+      col("event_type"), col("n"), col("total").cast("double").as("total")))
+      .collect().toSeq
+    assert(got == registered("t1_tumbling_window").collect().toSeq && got.nonEmpty)
   }
 
   test("T3 session window: stream equals batch, gap boundary is >= 30m") {
     import spark.implicits._
     val mem = MemoryStream[Ev](2, spark, None)
     mem.addData(fixture: _*)
-    Streams.runToMemory(Streams.sessionCounts(mem.toDF()), "t3_sink",
+    Streams.runToMemory(Streams.sessionCounts(mem.toDF()), "t3_gap_sink",
       OutputMode.Complete())
-    val got = spark.table("t3_sink").as[(Timestamp, Timestamp, Long, Long)]
+    val gap = spark.table("t3_gap_sink").as[(Timestamp, Timestamp, Long, Long)]
       .collect().toSet
     // user 2: events at 02:30 and 02:59 are 29m apart -> ONE session;
     // 00:40 is its own session. user 1: 00:05+00:20 merge, 01:05 separate.
-    val u2 = got.filter(_._3 == 2L)
+    val u2 = gap.filter(_._3 == 2L)
     assert(u2.size == 2)
     assert(u2.exists(s => s._4 == 2L)) // merged 02:30+02:59 session
-    val batch = Streams.sessionCounts(fixture.toDF())
-      .as[(Timestamp, Timestamp, Long, Long)].collect().toSet
-    assert(got == batch)
+    assert(gap.count(_._3 == 1L) == 2)
+    val sink = replayTo("t3_sink", 103, OutputMode.Complete())(Streams.sessionCounts)
+    val got = ordered(sink.select(col("user_id"), tus(col("s_start")).as("s_start"),
+      tus(col("s_end")).as("s_end"), col("n_events"))).collect().toSeq
+    assert(got == registered("t3_session_window").collect().toSeq && got.nonEmpty)
   }
 
   test("T2 sliding window: stream (complete mode) equals batch") {
-    import spark.implicits._
-    val mem = MemoryStream[Ev](7, spark, None)
-    mem.addData(fixture: _*)
-    Streams.runToMemory(Streams.slidingCounts(mem.toDF()), "t2_sink",
-      OutputMode.Complete())
-    val got = spark.table("t2_sink").collect().toSet
-    val want = Streams.slidingCounts(fixture.toDF()).collect().toSet
-    assert(got == want && got.nonEmpty)
+    val sink = replayTo("t2_sink", 107, OutputMode.Complete())(Streams.slidingCounts)
+    val got = ordered(sink.select(tstr(col("w_start")).as("w_start"),
+      col("event_type"), col("n"))).collect().toSeq
+    assert(got == registered("t2_sliding_window").collect().toSeq && got.nonEmpty)
     // every event appears in 4 sliding windows (1h window, 15m slide)
-    val totalN = spark.table("t2_sink").agg(sum("n")).head().getLong(0)
-    assert(totalN == fixture.size * 4)
+    assert(got.map(_.getLong(2)).sum == replay.size * 4L)
   }
 
   test("T4 watermark drops late rows in append mode") {
@@ -101,15 +123,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(w0.sameElements(Array(1L)))
   }
 
-  test("T5 stateful sessionization matches session_window") {
-    import spark.implicits._
-    val evs = fixture.map(e => (e.user_id, e.ts.getTime * 1000L)).toDS()
-    val got = Streams.statefulSessions(evs).collect()
-      .map(s => (s.userId, s.startMicros, s.nEvents)).toSet
-    val want = Streams.sessionCounts(fixture.toDF())
-      .select(col("user_id"), unix_micros(col("s_start")), col("n_events"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got == want && got.nonEmpty)
+  test("T5 stateful sessions: ordered replay equals t3_session_window") {
+    // a user that is not in the table sends two late flush events: the
+    // second batch runs at a watermark past every real session's end, so
+    // the event-time timeout closes them all
+    val sentinel = -1L
+    assert(!replay.exists(_.user_id == sentinel))
+    val end = replay.last.ts.getTime
+    val flush = Seq(1, 2).map(d =>
+      Seq(Ev(-d, new Timestamp(end + d * 86400000L), sentinel, "flush", 0, "{}")))
+    val sink = replayTo("t5_sink", 105, OutputMode.Append(), flush)(
+      Streams.sessionStream(_).toDF())
+    val got = ordered(sink.filter(col("userId") =!= sentinel).select(
+      col("userId").as("user_id"),
+      tus(timestamp_micros(col("startMicros"))).as("s_start"),
+      tus(timestamp_micros(col("endMicros"))).as("s_end"),
+      col("nEvents").as("n_events"))).collect().toSeq
+    assert(got == registered("t3_session_window").collect().toSeq && got.nonEmpty)
   }
 
   test("T6 stream dedup by event_id") {
@@ -119,6 +149,34 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(fixture.take(3): _*) // replay duplicates
     Streams.runToMemory(Streams.dedupEvents(mem.toDF()), "t6_sink")
     assert(spark.table("t6_sink").count() == fixture.size)
+  }
+
+  test("stream dedup state is bounded: ids the watermark has passed are evicted") {
+    import spark.implicits._
+    def ev(id: Long, t: String) = Ev(id, ts(t), id, "click", 0, "{}")
+    // 100 ids at 00:00, then 10 ids two hours later (the watermark moves
+    // past the first 100), then one more id
+    val batches = Seq(
+      (0L until 100L).map(ev(_, "2024-01-01 00:00:00")),
+      (100L until 110L).map(ev(_, "2024-01-01 02:00:00")),
+      Seq(ev(110L, "2024-01-01 02:01:00")))
+    val noUsers = spark.range(0).select(col("id").as("user_id"))
+    val legs: Seq[(String, DataFrame => DataFrame, OutputMode)] = Seq(
+      ("dedupEvents", Streams.dedupEvents, OutputMode.Append()),
+      ("newUserCountsIndexed", Streams.newUserCountsIndexed(_, noUsers),
+        OutputMode.Update()))
+    legs.zipWithIndex.foreach { case ((name, f, mode), i) =>
+      val mem = MemoryStream[Ev](40 + i, spark, None)
+      val q = f(mem.toDF()).writeStream.format("memory")
+        .queryName(s"dedup_state_$i").outputMode(mode).start()
+      val rows = try batches.map { b =>
+        mem.addData(b: _*); q.processAllAvailable()
+        q.lastProgress.stateOperators.filter(_.operatorName.startsWith("dedupe"))
+          .map(_.numRowsTotal).sum
+      } finally q.stop()
+      assert(rows.head == 100L && rows.last < rows.max,
+        s"Streams.$name keeps dedup state the watermark has passed: $rows")
+    }
   }
 
   test("incremental-ingest dedup: stream anti-joined on the persisted sha index") {
@@ -146,26 +204,6 @@ class StreamingSpec extends AnyFunSuite {
     val got = spark.table("t7_sink")
     assert(got.count() == fixture.size)
     assert(got.filter(col("tier").isNull).isEmpty)
-  }
-
-  test("streaming near-dup: stateless signatures probe the static band index") {
-    import spark.implicits._
-    val corpusDoc = (1 to 30).map(i => s"tok$i").mkString(" ")
-    val nearDup = ((1 to 28).map(i => s"tok$i") ++ Seq("xx", "yy")).mkString(" ")
-    val unrelated = (100 to 130).map(i => s"z$i").mkString(" ")
-    // static band index of the persisted corpus
-    val index = Seq((1000L, corpusDoc)).toDF("doc_id", "text")
-      .select(col("doc_id").as("corpus_id"),
-        graft.dedup.Dedup.minhashSigRow(col("text"), 3, 8).as("corpus_sig"))
-      .select(col("corpus_id"), col("corpus_sig"),
-        explode(graft.dedup.Dedup.bandKeys(col("corpus_sig"), 8, 2)).as("band_key"))
-    val mem = MemoryStream[Doc](10, spark, None)
-    mem.addData(Doc(1, nearDup), Doc(2, unrelated), Doc(3, "short"))
-    Streams.runToMemory(
-      Streams.nearDupCandidates(mem.toDF(), index), "nd_sink")
-    val got = spark.table("nd_sink")
-      .select("doc_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(got == Set((1L, 1000L))) // near-dup flagged; unrelated + short not
   }
 
   test("bloom-gated streaming ingest: stateless probe, verdict parity with batch") {
@@ -266,55 +304,32 @@ class StreamingSpec extends AnyFunSuite {
 
   test("T15 streaming new-user counts: ordered replay equals the batch curve") {
     import spark.implicits._
-    // event-time-ordered replay of the real sf0.001 event log in three
-    // micro-batches: dedup + day-count state must carry across batches
-    val evs = graft.sources.Tables(spark, sf).events
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy(col("ts"), col("event_id")).as[Ev].collect().toSeq
-    val mem = MemoryStream[Ev](21, spark, None)
-    val q = Streams.newUserCounts(mem.toDF())
-      .writeStream.format("memory").queryName("t15_sink")
-      .outputMode(OutputMode.Update()).start()
-    evs.grouped((evs.size + 2) / 3).foreach { b =>
-      mem.addData(b: _*); q.processAllAvailable()
-    }
-    q.stop()
+    // dedup + day-count state must carry across the replay's batches
+    val sink = replayTo("t15_sink", 21, OutputMode.Update())(Streams.newUserCounts)
     // update mode re-emits a day on change; the last row per day is the
     // current count
-    val got = spark.table("t15_sink")
+    val got = sink
       .groupBy("day").agg(last("new_users").as("new_users"))
       .as[(java.sql.Date, Long)].collect()
       .map { case (d, n) => d.toString -> n }.toMap
     // the streamed curve reconciles with the oracle-checked query:
     // on ordered replay, day-wise new_users equal t15's column (a day
     // with zero new users never gets a streaming row)
-    val t15 = SparkEntry.queries("t15_cumulative_users")(spark, sf)
+    val t15 = registered("t15_cumulative_users")
       .select(col("day"), col("new_users"))
       .as[(String, Long)].collect().toMap
     assert(got == t15.filter(_._2 > 0) && got.nonEmpty)
   }
 
   test("T16 streaming drift buckets: ordered replay equals the batch buckets") {
-    import spark.implicits._
     val evDf = graft.sources.Tables(spark, sf).events
     // frozen reference bins, exactly as the batch PSI monitor derives them
     val mm = evDf.agg(min(col("value")).as("lo"), max(col("value")).as("hi")).head()
     val lo = mm.getDouble(0); val width = (mm.getDouble(1) - lo) / 10
-    val evs = evDf
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy(col("ts"), col("event_id")).as[Ev].collect().toSeq
-    val mem = MemoryStream[Ev](22, spark, None)
-    val q = Streams.psiBucketCounts(mem.toDF(), lo, width)
-      .writeStream.format("memory").queryName("t16_sink")
-      .outputMode(OutputMode.Update()).start()
-    evs.grouped((evs.size + 2) / 3).foreach { b =>
-      mem.addData(b: _*); q.processAllAvailable()
-    }
-    q.stop()
+    val sink = replayTo("t16_sink", 22, OutputMode.Update())(
+      Streams.psiBucketCounts(_, lo, width))
     // update mode re-emits a cell on change; the last row is current
-    val got = spark.table("t16_sink")
+    val got = sink
       .groupBy(col("w_start"), col("bucket"))
       .agg(last(col("n")).as("n"))
       .collect().map(r => (r.getTimestamp(0), r.getInt(1)) -> r.getLong(2)).toMap
@@ -325,36 +340,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T28 streaming hysteresis: replayed day counts + shared transform equal batch alerts") {
-    import spark.implicits._
-    val evDf = graft.sources.Tables(spark, sf).events
-    val evs = evDf
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"), col("props"))
-      .orderBy(col("ts"), col("event_id")).as[Ev].collect().toSeq
-    val mem = MemoryStream[Ev](28, spark, None)
-    val q = Streams.dailyCounts(mem.toDF(), "error")
-      .writeStream.format("memory").queryName("t28_sink")
-      .outputMode(OutputMode.Update()).start()
-    evs.grouped((evs.size + 2) / 3).foreach { b =>
-      mem.addData(b: _*); q.processAllAvailable()
-    }
-    q.stop()
-    // update mode re-emits a day on change; per-day windowed counts only
-    // grow across emissions, so max() is both deterministic and the
-    // latest value (last() after a shuffle is order-nondeterministic)
-    val sink = spark.table("t28_sink")
-      .groupBy(col("d")).agg(max(col("n")).as("n"))
-    val got = graft.queries.EventOps.hysteresis(sink)
-      .collect().map(r => r.getAs[Long]("day_idx") ->
-        (r.getAs[Long]("n"), r.getAs[Int]("alert"))).toMap
-    val batchDays = evDf.filter(col("event_type") === "error")
-      .groupBy(expr("unix_micros(ts) DIV 86400000000").as("d"))
-      .agg(count(lit(1)).as("n"))
-    val want = graft.queries.EventOps.hysteresis(batchDays)
-      .collect().map(r => r.getAs[Long]("day_idx") ->
-        (r.getAs[Long]("n"), r.getAs[Int]("alert"))).toMap
+    // complete mode: the sink holds every day's final count
+    val sink = replayTo("t28_sink", 28, OutputMode.Complete())(
+      Streams.dailyCounts(_, "error"))
+    val got = ordered(graft.queries.EventOps.hysteresis(sink)).collect().toSeq
+    val want = registered("t28_hysteresis").collect().toSeq
     assert(got == want && got.nonEmpty,
-      s"stream/batch hysteresis divergence: ${(want.toSet -- got.toSet).take(3)}")
+      s"stream/batch hysteresis divergence: ${want.diff(got).take(3)}")
   }
 
   test("T9 stream-stream interval join: two MemoryStreams equal batch") {
