@@ -2,8 +2,9 @@ package graft.dms
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,9 +44,32 @@ import graft.Materialize.{Barrier, CutSyntax}
   * of them is live, and [[vacuum]] of an old generation only drops its
   * links. The store therefore needs a local filesystem that supports
   * hard links, as it already does for `_current` and [[vacuum]]. All
-  * mutations are DataFrame plans (anti-joins, window dedup), never
+  * mutations are DataFrame plans (key filters, window dedup), never
   * driver-side row loops; only the single-document ingest path
   * materializes one row on the driver, which is its natural home.
+  *
+  * Version catalog: the driver keeps the store's keys — the reference's
+  * HBase row keys `v{version}.{filename}` (DMS.py:102,114) — per shard:
+  * the shard's data files, relative to the generation (so a hard-linked
+  * file keeps its entry across a flip), and the `(filename, version,
+  * meta)` keys they hold. It never holds content, so its size is bounded
+  * by the key count: about 300 bytes per version, 1.5 MB (Spark's
+  * SizeEstimator) for the 1,238 files and 5,000 versions of the
+  * `docstore_mixed` store at sf0.1. Every call walks the live
+  * generation's data files (no Spark job) and re-reads only the shards
+  * whose file set changed since it was recorded, in one scan of
+  * `filename, version, meta` collected to the driver — the store's one
+  * intentional key-sized driver pull. That happens on first open, after
+  * [[uploadBatch]], and after a write by another instance on the same
+  * root; a partial next generation is never walked, so it never enters
+  * the catalog. [[upload]], [[update]], [[delete]],
+  * [[deleteAllVersions]], [[compact]] and [[truncate]] record their own
+  * keys and files, and [[vacuum]] never touches the live generation, so
+  * no read after them pays a refresh. [[latestVersion]], [[versions]],
+  * [[metadata]], the version lookups of upload and update, and the
+  * not-found case of [[content]] run no Spark job; search and the dedup
+  * reports take their latest-version set from it instead of ranking the
+  * store. The table [[all]] is listed once per (generation, file set).
   *
   * Fixed reference bugs (SURVEY.md §0): numeric version ordering, update
   * writing content (not the filename string), exact-filename matching
@@ -58,9 +82,25 @@ object DocStore {
     * but the shard count. */
   def shardOf(filename: String, nShards: Int): Int =
     math.floorMod(filename.hashCode, nShards)
+
+  private type Meta = Map[String, String]
+  /** One file's catalogued versions, ascending, with their meta maps. */
+  private type Versions = TreeMap[Int, Meta]
+
+  /** One shard of the version catalog: the data files it was read from
+    * and the keys they hold, by filename. */
+  private final case class ShardKeys(files: Set[String], byFile: Map[String, Versions])
+  private val emptyShard = ShardKeys(Set.empty, Map.empty)
+
+  /** One rewrite of the store, described once: in `shards`, the rows keyed
+    * `drop` go and the rows `add` come in. The same description filters
+    * the shards' live rows and updates the catalog. */
+  private final case class Rewrite(shards: Set[Int], drop: Set[(String, Int)],
+      add: Seq[Row] = Nil)
 }
 
 class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
+  import DocStore._
 
   /** Canonical schema — SURVEY.md §1.2. `hdfs_status` is the typed
     * FileStatus subset the reference writes per row (src/DMS.py:122,
@@ -81,11 +121,15 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     StructField("ingested_at", TimestampType)
   ))
 
-  /** FileStatus for a fresh ingest: byte length, JVM user, now,
-    * default parquet-file permission bits. */
-  private def fileStatusOf(bytes: Array[Byte], at: java.sql.Timestamp): Row =
-    Row(bytes.length.toLong, System.getProperty("user.name", "spark"),
-      at, "rw-r--r--")
+  /** A freshly ingested document row: sniffed metadata (D1) and a
+    * FileStatus of byte length, JVM user, now, and default parquet-file
+    * permission bits. */
+  private def docRow(filename: String, version: Int, bytes: Array[Byte]): Row = {
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    Row(filename, version, bytes, Metadata.sniff(bytes),
+      Row(bytes.length.toLong, System.getProperty("user.name", "spark"), now, "rw-r--r--"),
+      now)
+  }
 
   /** Filename -> shard, used BOTH as the partition column at write time
     * and driver-side to prune point lookups to one partition directory.
@@ -138,8 +182,11 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
   /** The live table (empty frame with the right schema before first write).
     * Includes the `shard` partition column so filters on it prune
     * partition directories. */
-  def all: DataFrame = {
-    val dir = Paths.get(genDir(currentGen))
+  def all: DataFrame = catalog().all
+
+  /** Generation `g`'s table, listed now. */
+  private def table(g: Int): DataFrame = {
+    val dir = Paths.get(genDir(g))
     if (Files.exists(dir) && closing(Files.list(dir))(_.hasNext))
       spark.read.schema(storedSchema).parquet(dir.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storedSchema)
@@ -150,43 +197,127 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
   private def closing[A](s: java.util.stream.Stream[Path])(f: Iterator[Path] => A): A =
     try f(s.iterator().asScala) finally s.close()
 
-  /** The `shard=<k>` directories of generation `g`, by shard. */
-  private def shardDirs(g: Int): Map[Int, Path] = {
+  /** Committed data files of generation `g`, relative to it, by shard.
+    * Spark's staging paths (`_temporary`, `.spark-staging-*`) and
+    * checksum files are not data files, so a write in flight is not seen. */
+  private def dataFiles(g: Int): Map[Int, Set[String]] = {
     val dir = Paths.get(genDir(g))
     if (!Files.exists(dir)) Map.empty
-    else closing(Files.list(dir))(_
-      .map(p => p -> p.getFileName.toString)
-      .collect { case (p, n) if n.startsWith("shard=") => n.stripPrefix("shard=").toInt -> p }
-      .toMap)
+    else closing(Files.walk(dir, 3))(_
+      .map(dir.relativize)
+      .filter { p =>
+        val name = p.getFileName.toString
+        p.getNameCount == 3 && p.getName(0).toString.startsWith("shard=") &&
+          p.getName(1).toString.startsWith("batch=") && name.endsWith(".parquet") &&
+          !name.startsWith(".") && !name.startsWith("_")
+      }
+      .toSeq.groupMap(_.getName(0).toString.stripPrefix("shard=").toInt)(_.toString)
+      .map { case (k, fs) => k -> fs.toSet })
   }
 
-  /** Copy-on-write of `shards` only: write generation g+1 of those shards
-    * from `f` applied to their live rows, hard-link every file of the
-    * other shards of g into g+1, then flip the pointer. `f` must keep each
-    * row in its shard. A crash before the flip leaves g live; the next
-    * rewrite's overwrite clears the partial g+1. */
-  private def rewriteShards(shards: Set[Int])(f: DataFrame => DataFrame): Unit = {
+  /** The version catalog of generation `gen` (see the class doc). `all` is
+    * that generation's table, listed at most once for this catalog. */
+  private final class Catalog(val gen: Int, val shards: Map[Int, ShardKeys],
+      listing: => DataFrame) {
+    lazy val all: DataFrame = listing
+    def versionsOf(filename: String): Versions =
+      shards.getOrElse(shardOf(filename), emptyShard).byFile
+        .getOrElse(filename, TreeMap.empty[Int, Meta])
+    def latest(filename: String): Option[Int] = versionsOf(filename).lastOption.map(_._1)
+    def keys: Iterator[(String, Int)] = shards.valuesIterator.flatMap(_.byFile.iterator
+      .flatMap { case (f, vs) => vs.keysIterator.map(f -> _) })
+    /** filename -> latest version. */
+    lazy val latestKeys: Map[String, Int] = shards.valuesIterator.flatMap(_.byFile.iterator
+      .map { case (f, vs) => f -> vs.lastKey }).toMap
+  }
+
+  /** Guarded by this store's lock: a stream thread may write
+    * ([[graft.streaming.Streams.docStoreIngest]]) while another reads. */
+  private var cat = new Catalog(-1, Map.empty, table(-1))
+
+  /** `byFile` without the keys `drop` and with the keys `add`. */
+  private def withKeys(byFile: Map[String, Versions], drop: Set[(String, Int)],
+      add: Iterable[(String, Int, Meta)]): Map[String, Versions] = {
+    val dropped = drop.foldLeft(byFile) { case (m, (f, v)) =>
+      m.get(f).map(_ - v).fold(m)(vs => if (vs.isEmpty) m - f else m.updated(f, vs))
+    }
+    add.foldLeft(dropped) { case (m, (f, v, meta)) =>
+      m.updated(f, m.getOrElse(f, TreeMap.empty[Int, Meta]).updated(v, meta))
+    }
+  }
+
+  private def keyOf(row: Row): (String, Int, Meta) =
+    (row.getString(0), row.getInt(1), row.getAs[Meta](3))
+
+  /** The catalog of the live generation: one walk of its data files, and
+    * one key scan of the shards whose file set changed since they were
+    * recorded (none when this instance made every change). */
+  private def catalog(): Catalog = synchronized {
     val g = currentGen
-    val next = g + 1
-    val live = all.filter(col("shard").isin(shards.toSeq: _*))
+    val files = dataFiles(g)
+    val stale = files.collect { case (k, fs) if !cat.shards.get(k).exists(_.files == fs) => k }.toSet
+    if (g != cat.gen || stale.nonEmpty || files.size != cat.shards.size) {
+      lazy val listed = table(g)
+      val read = if (stale.isEmpty) Map.empty[Int, Map[String, Versions]]
+        else listed.filter(col("shard").isin(stale.toSeq: _*))
+          .select("shard", "filename", "version", "meta").collect()
+          .groupBy(_.getInt(0)).map { case (k, rows) => k -> withKeys(Map.empty, Set.empty,
+            rows.map(r => (r.getString(1), r.getInt(2), r.getMap[String, String](3).toMap))) }
+      cat = new Catalog(g, files.map { case (k, fs) =>
+        k -> (if (stale(k)) ShardKeys(fs, read.getOrElse(k, Map.empty)) else cat.shards(k)) }, listed)
+    }
+    cat
+  }
+
+  /** Installs what catalog `c` became through this instance's own write,
+    * unless `c` was replaced meanwhile; the next call then re-reads
+    * whatever changed. */
+  private def record(c: Catalog, gen: Int, shards: Map[Int, ShardKeys]): Unit = synchronized {
+    if (cat eq c) cat = new Catalog(gen, shards, table(gen))
+  }
+
+  /** `(filename, version)` is one of `keys`. */
+  private def keyIn(keys: Iterable[(String, Int)]): Column =
+    struct(col("filename").as("_1"), col("version").as("_2")).isin(keys.toSeq.map(typedLit(_)): _*)
+
+  /** Copy-on-write of `r.shards` only: write generation g+1 of those shards
+    * from their live rows with `r` applied, hard-link every data file of
+    * the other shards of g into g+1, then flip the pointer. `r` must keep
+    * each row in its shard. A crash before the flip leaves g live; the next
+    * rewrite's overwrite clears the partial g+1. `c` is the catalog `r` was
+    * worked out from. */
+  private def rewriteShards(c: Catalog, r: Rewrite): Unit = {
+    val next = c.gen + 1
+    // `drop` comes from the catalog, so when it is as large as the shards'
+    // catalogued keys nothing survives and the shards need not be read
+    val held = r.shards.iterator.flatMap(c.shards.get).map(_.byFile.valuesIterator.map(_.size).sum).sum
+    val kept = c.all.filter(col("shard").isin(r.shards.toSeq: _*))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    f(live)
-      .withColumn("shard", shardUdf(col("filename")))
+      .filter(if (r.drop.size == held) lit(false) else !keyIn(r.drop))
+    val rows = if (r.add.isEmpty) kept
+      else kept.unionByName(spark.createDataFrame(spark.sparkContext.parallelize(r.add, 1), schema))
+    rows.withColumn("shard", shardUdf(col("filename")))
       .withColumn("batch", lit(s"g$next"))
       .write.partitionBy("shard", "batch").mode("overwrite").parquet(genDir(next))
-    val from = Paths.get(genDir(g))
-    val to = Paths.get(genDir(next))
-    for ((k, dir) <- shardDirs(g) if !shards(k)) closing(Files.walk(dir))(_.foreach { p =>
-      val q = to.resolve(from.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.createLink(q, p)
-    })
+    val (from, to) = (Paths.get(genDir(c.gen)), Paths.get(genDir(next)))
+    for ((k, s) <- c.shards if !r.shards(k); f <- s.files) {
+      Files.createDirectories(to.resolve(f).getParent)
+      Files.createLink(to.resolve(f), from.resolve(f))
+    }
     flipTo(next)
+    val files = dataFiles(next)
+    record(c, next, c.shards -- r.shards ++ r.shards.flatMap(k => files.get(k).map(fs =>
+      k -> ShardKeys(fs, withKeys(c.shards.getOrElse(k, emptyShard).byFile, r.drop, r.add.map(keyOf))))))
   }
 
   /** Append rows (already schema-shaped) to the live generation under a
-    * fresh batch partition (no idempotence contract for ad-hoc appends). */
-  private def append(df: DataFrame): Unit =
-    writeBatch(df, "a" + java.util.UUID.randomUUID().toString, overwrite = false)
+    * fresh batch partition (no idempotence contract for ad-hoc appends).
+    * Returns the batch id. */
+  private def append(df: DataFrame): String = {
+    val batch = "a" + java.util.UUID.randomUUID().toString
+    writeBatch(df, batch, overwrite = false)
+    batch
+  }
 
   /** Write one batch partition. `overwrite = true` uses DYNAMIC partition
     * overwrite — only the (shard, batch) partitions present in `df` are
@@ -205,15 +336,23 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
   }
 
   /** upload: assign next version (numeric max + 1, DMS.py:113-117 minus
-    * the string-sort bug), extract metadata (D1), append. Returns the
-    * assigned version. */
+    * the string-sort bug) from the catalog, extract metadata (D1), append.
+    * The append is recorded in the catalog when the shard's only new files
+    * are its own batch directory. Returns the assigned version. */
   def upload(filename: String, bytes: Array[Byte]): Int = {
-    val next = latestVersion(filename).getOrElse(0) + 1
-    val meta = Metadata.sniff(bytes)
-    val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val row = Row(filename, next, bytes, meta, fileStatusOf(bytes, now), now)
-    append(spark.createDataFrame(
+    val c = catalog()
+    val next = c.latest(filename).getOrElse(0) + 1
+    val row = docRow(filename, next, bytes)
+    val batch = append(spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(row), 1), schema))
+    val k = shardOf(filename)
+    val old = c.shards.getOrElse(k, emptyShard)
+    val files = dataFiles(c.gen).getOrElse(k, Set.empty)
+    val own = files -- old.files
+    if (old.files.subsetOf(files) && own.nonEmpty &&
+        own.forall(_.startsWith(s"shard=$k/batch=$batch/")))
+      record(c, c.gen, c.shards.updated(k,
+        ShardKeys(files, withKeys(old.byFile, Set.empty, Seq(keyOf(row))))))
     next
   }
 
@@ -223,7 +362,8 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     * batch. [[upload]] is semantically this with a 1-row batch; streams
     * call it per micro-batch ([[graft.streaming.Streams.docStoreIngest]])
     * — at 100 TB this is the difference between one store aggregate per
-    * BATCH and one per document.
+    * BATCH and one per document. The catalog re-reads the shards it wrote
+    * on its next call.
     *
     * Intra-batch ordering: a CDC micro-batch can carry several updates to
     * the same filename, and "latest version wins" must follow EVENT order,
@@ -250,9 +390,10 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     val ord = seq.map(c => col(c).asc).toSeq :+ xxhash64(col("content")).asc
     // a replayed batch must not see its own earlier (possibly partial)
     // rows when computing the per-file latest, or versions would shift
+    val stored = table(currentGen)
     val base = batchId match {
-      case Some(id) => all.filter(col("batch") =!= id)
-      case None     => all
+      case Some(id) => stored.filter(col("batch") =!= id)
+      case None     => stored
     }
     val latest = base.groupBy(col("filename")).agg(max(col("version")).as("__cur"))
     val w = Window.partitionBy(col("filename")).orderBy(ord: _*)
@@ -271,7 +412,7 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     batchId match {
       // Barrier, not Shared: the replay write dynamic-partition-
       // OVERWRITES the very store root `rows`'s lineage reads (via
-      // `all`/`latest`), so the cut must sever eagerly in reliable mode
+      // `stored`/`latest`), so the cut must sever eagerly in reliable mode
       // too — a lazy persist leaves the read-path in the plan and Spark
       // refuses the overwrite (MaterializeSpec pins this under the flag)
       case Some(id) => writeBatch(rows.cut(Barrier), id, overwrite = true)
@@ -279,52 +420,56 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     }
   }
 
-  /** download: content of the latest (or given) version. The latest is
-    * one shard-pruned top-1 query, not a version lookup then a read. */
-  def download(filename: String, version: Option[Int] = None): Option[Array[Byte]] =
-    version match {
-      case Some(v) => content(filename, v)
-      case None =>
-        all.filter(forFile(filename)).orderBy(col("version").desc).limit(1)
-          .select("content").collect().headOption.map(_.getAs[Array[Byte]](0))
-    }
+  /** download: content of the latest (or given) version — the catalog's
+    * latest version, then one shard-pruned content read. */
+  def download(filename: String, version: Option[Int] = None): Option[Array[Byte]] = {
+    val c = catalog()
+    version.orElse(c.latest(filename)).flatMap(contentOf(c, filename, _))
+  }
 
   /** update: replace the latest version's content in place (the reference
     * meant to do this and instead wrote the filename string and crashed
     * on an undefined variable — DMS.py:225,228). */
-  def update(filename: String, bytes: Array[Byte]): Boolean =
-    latestVersion(filename) match {
+  def update(filename: String, bytes: Array[Byte]): Boolean = {
+    val c = catalog()
+    c.latest(filename) match {
       case None => false
       case Some(v) =>
-        val meta = Metadata.sniff(bytes)
-        val now = new java.sql.Timestamp(System.currentTimeMillis())
-        val replacement = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq(Row(filename, v, bytes, meta, fileStatusOf(bytes, now), now)), 1), schema)
-        rewriteShards(Set(shardOf(filename)))(
-          _.filter(!(col("filename") === filename && col("version") === v))
-            .unionByName(replacement))
+        rewriteShards(c, Rewrite(Set(shardOf(filename)), Set(filename -> v),
+          Seq(docRow(filename, v, bytes))))
         true
     }
+  }
 
-  /** delete one (filename, version) — anti-join rewrite of its shard (S8). */
-  def delete(filename: String, version: Int): Unit =
-    rewriteShards(Set(shardOf(filename)))(
-      _.filter(!(col("filename") === filename && col("version") === version)))
+  /** delete one (filename, version) — a key-filter rewrite of its shard
+    * (S8). A key the catalog does not hold writes nothing. */
+  def delete(filename: String, version: Int): Unit = {
+    val c = catalog()
+    if (c.versionsOf(filename).contains(version))
+      rewriteShards(c, Rewrite(Set(shardOf(filename)), Set(filename -> version)))
+  }
 
   /** delete every version of a file. Exact filename equality — the
     * reference's unanchored-regex match (DMS.py:373) also deleted
-    * `bad-a.txt` when asked for `a.txt`. */
-  def deleteAllVersions(filename: String): Unit =
-    rewriteShards(Set(shardOf(filename)))(_.filter(col("filename") =!= filename))
+    * `bad-a.txt` when asked for `a.txt`. A file the catalog does not hold
+    * writes nothing. */
+  def deleteAllVersions(filename: String): Unit = {
+    val c = catalog()
+    val drop = c.versionsOf(filename).keysIterator.map(filename -> _).toSet
+    if (drop.nonEmpty) rewriteShards(c, Rewrite(Set(shardOf(filename)), drop))
+  }
 
   /** delete_all: truncate to an empty generation. */
-  def truncate(): Unit =
-    rewriteShards((0 until nShards).toSet)(_.filter(lit(false)))
+  def truncate(): Unit = {
+    val c = catalog()
+    rewriteShards(c, Rewrite((0 until nShards).toSet, c.keys.toSet))
+  }
 
-  /** Latest version per file, numeric (A1/W1). */
-  def latestVersions: DataFrame =
-    all.groupBy(col("filename")).agg(max(col("version")).as("version"))
+  /** Latest version per file, numeric (A1/W1), from the catalog. */
+  def latestVersions: DataFrame = {
+    import spark.implicits._
+    catalog().latestKeys.toSeq.toDF("filename", "version")
+  }
 
   /** Compaction: rewrite each shard that holds more than one batch
     * partition into one densely-packed partition, in a fresh generation
@@ -336,19 +481,15 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     * Readers in flight keep their old generation; [[vacuum]] reclaims it
     * later. */
   def compact(): Unit = {
-    val multi = shardDirs(currentGen).collect {
-      case (k, dir) if closing(Files.list(dir))(
-        _.count(_.getFileName.toString.startsWith("batch=")) > 1) => k
+    val c = catalog()
+    val multi = c.shards.collect {
+      case (k, s) if s.files.map(f => Paths.get(f).getName(1)).size > 1 => k
     }.toSet
-    if (multi.nonEmpty) rewriteShards(multi)(identity)
+    if (multi.nonEmpty) rewriteShards(c, Rewrite(multi, Set.empty))
   }
 
   /** Data files of the live generation (compaction/vacuum observability). */
-  def dataFileCount(): Int = {
-    val dir = Paths.get(genDir(currentGen))
-    if (!Files.exists(dir)) 0
-    else closing(Files.walk(dir))(_.count(_.getFileName.toString.endsWith(".parquet")))
-  }
+  def dataFileCount(): Int = dataFiles(currentGen).valuesIterator.map(_.size).sum
 
   /** Garbage-collect superseded generations, keeping the live one plus
     * `keep` predecessors (time-travel/readers-in-flight window — the
@@ -388,25 +529,24 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
       .filter(col("rn") === 1)
       .drop("rn")
 
-  /** Numeric latest version of one file (shard-pruned point lookup). */
-  def latestVersion(filename: String): Option[Int] = versions(filename).lastOption
+  /** Numeric latest version of one file, from the catalog. */
+  def latestVersion(filename: String): Option[Int] = catalog().latest(filename)
 
-  /** All versions of one file, ascending (A2; shard-pruned). One scan job:
-    * a file's versions are few, so they are sorted on the driver rather
-    * than by a range-partitioned `orderBy`, which samples first. */
-  def versions(filename: String): Seq[Int] =
-    all.filter(forFile(filename)).select("version")
-      .collect().toIndexedSeq.map(_.getInt(0)).sorted
+  /** All versions of one file, ascending (A2), from the catalog. */
+  def versions(filename: String): Seq[Int] = catalog().versionsOf(filename).keys.toSeq
 
-  /** Metadata map of one (filename, version) — shard-pruned. */
+  /** Metadata map of one (filename, version), from the catalog. */
   def metadata(filename: String, version: Int): Option[Map[String, String]] =
-    all.filter(forFile(filename) && col("version") === version)
-      .select("meta").collect().headOption
-      .map(_.getMap[String, String](0).toMap)
+    catalog().versionsOf(filename).get(version)
 
-  /** Content bytes of one (filename, version) — shard-pruned. */
+  /** Content bytes of one (filename, version) — shard-pruned; a key the
+    * catalog does not hold reads nothing. */
   def content(filename: String, version: Int): Option[Array[Byte]] =
-    all.filter(forFile(filename) && col("version") === version)
+    contentOf(catalog(), filename, version)
+
+  private def contentOf(c: Catalog, filename: String, version: Int): Option[Array[Byte]] =
+    if (!c.versionsOf(filename).contains(version)) None
+    else c.all.filter(forFile(filename) && col("version") === version)
       .select("content").collect().headOption.map(_.getAs[Array[Byte]](0))
 
   /** Regex scan over filenames — the reference's RowFilter pushdown
@@ -415,14 +555,17 @@ class DocStore(spark: SparkSession, root: String, nShards: Int = 16) {
     all.filter(col("filename").rlike(pattern))
 
   /** Latest-version rows with decoded text — the corpus that search and
-    * the dedup reports read. */
-  private def latestText: DataFrame =
-    all.withColumn("rn",
-        row_number().over(Window.partitionBy(col("filename"))
-          .orderBy(col("version").desc)))
-      .filter(col("rn") === 1)
+    * the dedup reports read: the live table filtered to the catalog's
+    * latest keys. The keys ride in the filter's closure: as an `In` list
+    * of one literal per file, planning them cost more than the scan. */
+  private def latestText: DataFrame = {
+    val c = catalog()
+    val latest = c.latestKeys
+    val isLatest = udf((f: String, v: Int) => latest.get(f).contains(v))
+    c.all.filter(isLatest(col("filename"), col("version")))
       .select(col("filename"), col("version"),
         decode(col("content"), "UTF-8").as("text"))
+  }
 
   /** Full-text TF-IDF search over latest-version text content — the
     * Solr replacement (D3). Returns (filename, version, score) ranked.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dms.DocStore
+import graft.functions.Metadata
 
 /** End-to-end facade test: the reference's DMS surface (upload/download/
   * update/delete/versions/metadata/search) over the snapshot-generation
@@ -41,6 +42,22 @@ class DocStoreSpec extends AnyFunSuite {
 
   private def hits(df: DataFrame): Seq[(String, Int, Double)] =
     df.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getDouble(2)))
+
+  /** Spark jobs that `f` runs, counted over a job group. */
+  private def jobs(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"docstore-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    org.apache.spark.ListenerDrain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** The catalog's answers for `files`: latest version, versions, the meta
+    * of each version, and a metadata read of a version that is absent. */
+  private def catalogView(s: DocStore, files: Seq[String]) =
+    files.map(f => (s.latestVersion(f), s.versions(f),
+      s.versions(f).map(s.metadata(f, _)), s.metadata(f, 99)))
 
   test("upload assigns 1..n and survives past v10 (numeric, not string, order)") {
     val s = newStore()
@@ -193,6 +210,8 @@ class DocStoreSpec extends AnyFunSuite {
     val s = newStore()
     s.upload("a.txt", "zebra".getBytes) // v1 is shadowed: zebra is in no latest doc
     s.upload("a.txt", "spark spark window".getBytes)
+    // shadowed too: counting old versions would make N = 5 and df(spark) = 3
+    s.upload("b.txt", "spark zebra".getBytes)
     s.upload("b.txt", "window table".getBytes)
     s.upload("c.txt", "spark row".getBytes)
     val idf = math.log(3.0 / 2.0) // N = 3 latest docs, df(spark) = df(window) = 2
@@ -202,8 +221,9 @@ class DocStoreSpec extends AnyFunSuite {
       got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) < 1e-12, s"$q: $got") }
     }
     check("spark zebra", Seq(("a.txt", 2, 2 * idf), ("c.txt", 1, idf)))
+    check("zebra", Nil)
     // equal scores are ordered by filename
-    check("window", Seq(("a.txt", 2, idf), ("b.txt", 1, idf)))
+    check("window", Seq(("a.txt", 2, idf), ("b.txt", 2, idf)))
     assert(hits(s.search("spark spark")) == hits(s.search("spark")))
     for (q <- Seq("", "   ")) {
       val df = s.search(q)
@@ -211,6 +231,14 @@ class DocStoreSpec extends AnyFunSuite {
         Seq(("filename", StringType), ("version", IntegerType), ("score", DoubleType)))
       assert(df.collect().isEmpty, s"query '$q'")
     }
+    // an update replaces the latest text: df(zebra) = 1, df(spark) = 1
+    s.update("c.txt", "zebra row".getBytes)
+    check("zebra", Seq(("c.txt", 1, math.log(3.0))))
+    check("spark", Seq(("a.txt", 2, 2 * math.log(3.0))))
+    // deleting a.txt's latest makes its shadowed v1 the latest again
+    s.delete("a.txt", 2)
+    check("zebra", Seq(("a.txt", 1, idf), ("c.txt", 1, idf)))
+    check("spark", Nil)
   }
 
   test("delete rewrites one shard; the others are hard links that survive vacuum") {
@@ -275,9 +303,98 @@ class DocStoreSpec extends AnyFunSuite {
     val rows = contents(s.all)
     assert(rows.size == 4 && s.versions("f1.txt") == Seq(1))
     assert(new String(s.download("f1.txt").get) == "body 1")
+    val files = (0 until 4).map(i => s"f$i.txt")
+    val want = (0 until 4).map(i =>
+      (Some(1), Seq(1), Seq(Some(Metadata.sniff(s"body $i".getBytes))), None))
+    assert(catalogView(s, files) == want)
+    assert(catalogView(new DocStore(spark, root.toString), files) == want)
     s.delete("f0.txt", 1)
     assert(liveGen(root) == g + 1 && !Files.exists(junk))
     assert(contents(s.all) == rows.filterNot(_._1 == "f0.txt"))
+  }
+
+  test("catalog reads after this instance's writes run no job; upload and download run one") {
+    val (s, root) = newRootedStore()
+    val files = Seq("a.txt", "b.txt", "c.txt", "none.txt")
+    def reads(after: String): Unit = {
+      var got: Seq[Any] = Nil
+      assert(jobs { got = catalogView(s, files) } == 0, s"a read after $after ran a job")
+      // what this instance recorded equals what a fresh instance reads
+      assert(got == catalogView(new DocStore(spark, root.toString), files), after)
+    }
+    assert(jobs(s.upload("a.txt", "alpha".getBytes)) == 1)
+    reads("upload")
+    assert(jobs(s.upload("a.txt", "alpha two".getBytes)) == 1)
+    s.upload("b.txt", "beta".getBytes)
+    s.upload("c.txt", "gamma".getBytes)
+    reads("uploads")
+    assert(s.versions("a.txt") == Seq(1, 2) && s.metadata("b.txt", 1).contains(Metadata.sniff("beta".getBytes)))
+    var got: Option[Array[Byte]] = None
+    assert(jobs { got = s.download("a.txt") } == 1)
+    assert(got.map(new String(_)).contains("alpha two"))
+    assert(jobs { assert(s.download("none.txt").isEmpty && s.content("a.txt", 9).isEmpty) } == 0)
+    s.update("a.txt", "patched".getBytes)
+    reads("update")
+    assert(s.metadata("a.txt", 2).contains(Metadata.sniff("patched".getBytes)))
+    s.delete("a.txt", 1)
+    reads("delete")
+    s.deleteAllVersions("b.txt")
+    reads("deleteAllVersions")
+    s.upload("c.txt", "gamma two".getBytes) // c.txt's shard now holds two batches
+    val g = liveGen(root)
+    s.compact()
+    assert(liveGen(root) == g + 1, "compact rewrote nothing")
+    reads("compact")
+    s.vacuum(keep = 0)
+    reads("vacuum")
+    assert(catalogView(s, files).map(_._2) == Seq(Seq(2), Nil, Seq(1, 2), Nil))
+    s.truncate()
+    reads("truncate")
+    assert(files.forall(s.versions(_).isEmpty))
+  }
+
+  test("deletes of absent keys write nothing") {
+    val (s, root) = newRootedStore()
+    s.upload("a.txt", "one".getBytes)
+    s.upload("a.txt", "two".getBytes)
+    s.upload("b.txt", "bee".getBytes)
+    val files = Seq("a.txt", "b.txt", "zzz.txt")
+    val (gen, gens) = (liveGen(root), Files.list(root).count())
+    val (rows, view) = (contents(s.all), catalogView(s, files))
+    assert(jobs {
+      s.delete("a.txt", 3)
+      s.delete("zzz.txt", 1)
+      s.deleteAllVersions("zzz.txt")
+    } == 0)
+    assert(liveGen(root) == gen && Files.list(root).count() == gens)
+    assert(contents(s.all) == rows && catalogView(s, files) == view)
+  }
+
+  test("another writer on the same root: reads equal a freshly opened store's") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, encode}
+    val (s, root) = newRootedStore()
+    s.upload("a.txt", "alpha one".getBytes)
+    s.upload("b.txt", "beta shared".getBytes)
+    val files = Seq("a.txt", "b.txt", "c.txt")
+    assert(s.versions("a.txt") == Seq(1)) // s's catalog is current here
+    val t = new DocStore(spark, root.toString)
+    t.upload("a.txt", "alpha two shared".getBytes)
+    t.delete("b.txt", 1)
+    val batch = Seq(("c.txt", "gamma shared"), ("a.txt", "alpha three shared"))
+      .toDF("filename", "txt").select(col("filename"), encode(col("txt"), "UTF-8").as("content"))
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    t.uploadBatch(batch, ts, batchId = Some("b1"))
+    t.uploadBatch(batch, ts, batchId = Some("b1")) // a replay of the same batch
+    t.vacuum(keep = 0)
+    val fresh = new DocStore(spark, root.toString)
+    assert(catalogView(s, files) == catalogView(fresh, files))
+    assert(s.versions("a.txt") == Seq(1, 2, 3) && s.versions("b.txt").isEmpty)
+    files.foreach(f => assert(s.download(f).map(new String(_)) == fresh.download(f).map(new String(_)), f))
+    assert(new String(s.download("a.txt").get) == "alpha three shared")
+    val found = hits(s.search("shared alpha"))
+    assert(found == hits(fresh.search("shared alpha")))
+    assert(found.map(_._1).toSet == Set("a.txt", "c.txt"))
   }
 
   test("dedupClusters groups transitively; duplicatedSpanReport flags shared runs") {
